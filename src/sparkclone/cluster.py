@@ -1,12 +1,14 @@
-"""Iterative connected components over the finding edge DataFrame.
+"""Connected components over the finding edge DataFrame.
 
-Replaces the reference's in-memory path-compressed union-find
-(``similarity/clustering.py:8-43``) with min-label propagation over a
-DataFrame edge list: each round every node adopts the minimum label in its
-closed neighborhood; convergence when no label changes. Clone graphs are
-unions of near-cliques/stars (tiny diameter), so rounds stay in the low
-single digits; ``max_iterations`` bounds pathological chains and
-``localCheckpoint`` truncates lineage each round so plans don't grow.
+Graphs with at most ``ClusterConfig.small_graph_edges`` distinct edges run
+the reference's in-memory path-compressed union-find
+(``similarity/clustering.py:8-43``) in the driver. Bigger graphs run
+min-label propagation over a DataFrame edge list: each round every node
+adopts the minimum label in its closed neighborhood; convergence when no
+label changes. Clone graphs are unions of near-cliques/stars (tiny
+diameter), so rounds stay in the low single digits; ``max_iterations``
+bounds pathological chains and ``localCheckpoint`` truncates lineage each
+round so plans don't grow.
 
 Cluster ids are densified 1..K ordered by each cluster's minimum member
 identity — deterministic, and equivalent to the reference's first-seen
@@ -34,33 +36,30 @@ def connected_components(
 ) -> DataFrame:
     """edges(src, dst) -> (unit_id, cluster_id, cluster_root).
 
-    Nodes are identity strings; internally hashed to int64 with xxhash64
-    for compact shuffles (collision odds ~n^2/2^64 — negligible below
-    ~10^8 finding endpoints, and any collision only ever merges clusters,
-    never splits).
+    Two routes behind one cap (``cfg.small_graph_edges``): a driver
+    union-find over the fetched string pairs, else the distributed
+    min-label loop. On the distributed route nodes are hashed to int64
+    with xxhash64 for compact shuffles (collision odds ~n^2/2^64 —
+    negligible below ~10^8 finding endpoints, and any collision only ever
+    merges clusters, never splits).
     """
-    # FAST PATH (one-cascade CC): fetch the distinct (src, dst) STRING
-    # pairs — self-pairs included, they carry otherwise-singleton nodes —
-    # in ONE capped Arrow action and run the reference's path-compressed
-    # union-find over the strings directly. This replaces the int64
-    # route's separate cascades (hashed-edge dedupe + capped edge fetch +
-    # capped node-table fetch) with one aggregation + one fetch + one
-    # createDataFrame upload, and skips the xxhash64 relabeling
-    # round-trip entirely (guide §2.4: remove whole passes). Strings are
-    # heavier per row than int64 pairs, so the cap is lower (250k pairs,
-    # tens of MB in Arrow); graphs above it fall through to the int64
-    # route unchanged (which keeps its own small_graph_edges bound), and
-    # small_graph_edges=0 — the distributed-loop force — bypasses both
-    # driver routes.
+    # Driver route: fetch the distinct (src, dst) string pairs — self-pairs
+    # included, they carry otherwise-singleton nodes — in ONE capped Arrow
+    # action. If at most small_graph_edges pairs come back, the whole graph
+    # is in hand: run the reference's path-compressed union-find over the
+    # strings and upload the membership in one createDataFrame. A full
+    # cap+1 fetch means the graph is too big for the driver, and the
+    # distributed loop below runs instead; small_graph_edges=0 skips the
+    # fetch and forces that loop. Arrow, not collect(): Python Rows carry
+    # ~10x the raw bytes.
     if cfg.small_graph_edges > 0:
-        cap_pairs = min(cfg.small_graph_edges, 250_000)
         pairs_pdf = (
             edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
             .dropDuplicates()
-            .limit(cap_pairs + 1)
+            .limit(cfg.small_graph_edges + 1)
             .toPandas()
         )
-        if len(pairs_pdf) <= cap_pairs:
+        if len(pairs_pdf) <= cfg.small_graph_edges:
             return _driver_cc_strings(edges.sparkSession, pairs_pdf, dense_ids)
 
     e = (
@@ -76,133 +75,6 @@ def connected_components(
         .dropDuplicates()
         .withColumn("node", F.xxhash64("unit_id"))
     )
-
-    # Hybrid execution: finding graphs are usually tiny relative to the
-    # corpus; below the threshold, collect the int64 edge list and run
-    # the same path-compressed union-find the reference uses — exact,
-    # deterministic, and a handful of ms instead of one Spark job round
-    # per label-propagation iteration. The distributed loop below remains
-    # the path for billion-edge graphs.
-    #
-    # ONE action decides the route AND fetches the edges:
-    # limit(threshold+1).toPandas() — if the cap comes back full the graph
-    # is big and we fall to the distributed loop (e stays persisted for
-    # it). The former count()-then-collect() pair cost an extra full job
-    # round per pipeline — a cluster-size-constant coordination cost,
-    # exactly the kind the scaling protocol punishes. Arrow transfer, not
-    # collect(): Python Row objects carry ~10x the raw 16 B/edge, so a
-    # full 2M-row routing sample would transiently hold hundreds of MB of
-    # driver heap as Rows vs ~32 MB as two int64 numpy columns.
-    # toLocalIterator remains banned here (one sequential job per
-    # partition).
-    edge_pdf = e.limit(cfg.small_graph_edges + 1).toPandas()
-    if len(edge_pdf) <= cfg.small_graph_edges:
-        spark = edges.sparkSession
-        parent: dict[int, int] = {}
-
-        def find(x: int) -> int:
-            while parent.get(x, x) != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return parent.get(x, x)
-
-        e.unpersist()  # fully consumed; nothing downstream references it
-        for u, v in zip(edge_pdf["u"].to_numpy(), edge_pdf["v"].to_numpy()):
-            u, v = int(u), int(v)
-            parent.setdefault(u, u)
-            parent.setdefault(v, v)
-            ru, rv = find(u), find(v)
-            if ru != rv:
-                parent[rv] = ru
-
-        # One-fetch finish: pull the (unit_id, node) table via Arrow and
-        # assign labels + dense ids + roots entirely in the driver — the
-        # remaining work is a dict pass over the node list, and doing it
-        # here replaces three more job rounds (label broadcast join,
-        # roots fetch, dense-id join) with a single createDataFrame.
-        # Node count is NOT bounded by 2x edges (units appearing only in
-        # self-edge findings are singleton components), hence the capped
-        # fetch; past the cap fall through to the join-based finish.
-        # The cap is deliberately far below 2x small_graph_edges: the
-        # result upload is a driver-side createDataFrame, so the
-        # all-driver finish only pays off while the node table is
-        # hundreds-of-MB small; bigger graphs keep the distributed
-        # broadcast-join finish below.
-        if dense_ids:
-            node_cap = min(2 * cfg.small_graph_edges, 500_000)
-            node_pdf = nodes.limit(node_cap + 1).toPandas()
-            if len(node_pdf) <= node_cap:
-                import pandas as pd
-
-                labs = [int(find(int(n))) for n in node_pdf["node"].to_numpy()]
-                pdf = pd.DataFrame(
-                    {"unit_id": node_pdf["unit_id"], "label": labs}
-                )
-                # pandas str min == Spark's UTF8String ordering for the
-                # ascii unit ids (and for valid UTF-8 generally: byte
-                # order == code-point order)
-                root_of = pdf.groupby("label")["unit_id"].min()
-                order = root_of.sort_values(kind="mergesort")
-                cid = {lab: i + 1 for i, lab in enumerate(order.index)}
-                out_pdf = pd.DataFrame(
-                    {
-                        "unit_id": pdf["unit_id"],
-                        "cluster_id": pdf["label"].map(cid),
-                        "cluster_root": pdf["label"].map(root_of),
-                    }
-                )
-                # a pandas frame rides the Arrow upload path (the session
-                # builders enable spark.sql.execution.arrow.pyspark);
-                # tuple lists would be row-pickled
-                return spark.createDataFrame(
-                    out_pdf, "unit_id string, cluster_id int, cluster_root string"
-                )
-
-        import pandas as pd
-
-        labels_df = spark.createDataFrame(
-            pd.DataFrame(
-                {"node": list(parent), "label": [find(n) for n in parent]}
-            ),
-            "node long, label long",
-        ) if parent else spark.createDataFrame([], "node long, label long")
-        # left join: nodes appearing only in self-edge findings keep
-        # themselves as label (singleton clusters — clustering.py:27-31
-        # registers both endpoints of every finding)
-        membership = nodes.join(F.broadcast(labels_df), "node", "left").select(
-            "unit_id", F.coalesce(F.col("label"), F.col("node")).alias("label")
-        )
-        if dense_ids and len(edge_pdf) <= 100_000:
-            # Small graph: collect the per-component roots in ONE action
-            # and assign dense ids in the driver, instead of _densify's
-            # range-partition + eager localCheckpoint + counts-collect
-            # round-trips — identical ids (1..K ordered by min member
-            # identity), three fewer cluster-size-constant job rounds per
-            # pipeline. Component count is NOT bounded by 2x edges —
-            # units appearing only in self-edge findings are singleton
-            # components via the coalesce above — so the fetch itself is
-            # capped: a full cap+1 result means too many components for
-            # the driver and we fall back to the distributed densify.
-            cap = 200_000
-            roots_pdf = (
-                membership.groupBy("label")
-                .agg(F.min("unit_id").alias("cluster_root"))
-                .limit(cap + 1)
-                .toPandas()
-            )
-            if len(roots_pdf) <= cap:
-                roots_pdf = roots_pdf.sort_values(
-                    "cluster_root", kind="mergesort"
-                ).reset_index(drop=True)
-                roots_pdf["cluster_id"] = roots_pdf.index + 1
-                dense_df = spark.createDataFrame(
-                    roots_pdf[["label", "cluster_id", "cluster_root"]],
-                    "label long, cluster_id int, cluster_root string",
-                )
-                return membership.join(F.broadcast(dense_df), "label").select(
-                    "unit_id", "cluster_id", "cluster_root"
-                )
-        return _densify(membership, dense_ids)
     # symmetric edge list (u -> v both directions)
     sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v"))).dropDuplicates()
     sym = sym.localCheckpoint(eager=True)
@@ -237,16 +109,15 @@ def connected_components(
 
 
 def _driver_cc_strings(spark, pairs_pdf, dense_ids: bool) -> DataFrame:
-    """All-driver CC over a fetched distinct (a, b) string-pair frame:
-    path-compressed union-find (the reference's own algorithm,
-    clustering.py:8-43) + dense-id / root assignment, uploaded back in
-    one Arrow createDataFrame. Self-pairs register their node and merge
-    nothing. cluster_id is 1..K ordered by each component's minimum
-    member identity (identical to the int64 route's dense ids); with
-    dense_ids=False the same ordering is used as the long-typed label —
-    labels are per-component-arbitrary by contract (consumers only group
-    by them), and the int64 route's xxhash-derived labels were equally
-    arbitrary."""
+    """Driver route of ``connected_components`` over a fetched distinct
+    (a, b) string-pair frame: path-compressed union-find (the reference's
+    own algorithm, clustering.py:8-43) + dense-id / root assignment,
+    uploaded back in one Arrow createDataFrame. Self-pairs register their
+    node and merge nothing. cluster_id is 1..K ordered by each
+    component's minimum member identity (the same ids ``_densify`` gives
+    the distributed route); with dense_ids=False the same ordering is
+    used as the long-typed label — labels are per-component-arbitrary by
+    contract (consumers only group by them)."""
     import pandas as pd
 
     parent: dict[str, str] = {}

@@ -124,12 +124,14 @@ class ClusterConfig:
 
     min_size: int = 2
     max_iterations: int = 25
-    # Edge-count threshold below which connected components run as a
-    # driver-side path-compressed union-find (the reference's own
-    # algorithm, clustering.py:8-43) instead of the iterative DataFrame
-    # loop. Finding graphs are orders smaller than the corpus; 2M edges
-    # collect to ~32 MB. Above the threshold the distributed loop runs.
-    small_graph_edges: int = 2_000_000
+    # Cap on distinct (unit_a, unit_b) string pairs for the driver route
+    # of connected components: at most this many, and they are fetched in
+    # one Arrow action and joined by a driver-side path-compressed
+    # union-find (the reference's own algorithm, clustering.py:8-43);
+    # more, and the distributed min-label loop runs. Finding graphs are
+    # orders smaller than the corpus; 250k string pairs are tens of MB in
+    # Arrow. 0 forces the distributed loop.
+    small_graph_edges: int = 250_000
 
 
 @dataclass(frozen=True)
