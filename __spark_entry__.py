@@ -84,7 +84,7 @@ def entry(spark: SparkSession) -> DataFrame:
     from sparkclone.pipeline import run_pipeline
 
     corpus = documents_as_corpus(_docs(spark, "/root/testdata/sf0.001"))
-    out = run_pipeline(spark, corpus, _doc_pipeline_config(), eager_metrics=False)
+    out = run_pipeline(spark, corpus, _doc_pipeline_config())
     sizes = out["cluster_sizes"]
     return sizes.select(
         "cluster_id",
@@ -634,7 +634,7 @@ def _q_clone_pipeline_portable_sizes(spark, sf_dir):
         lcs_evidence=False,
     )
     corpus = documents_as_corpus(_docs(spark, sf_dir))
-    out = run_pipeline(spark, corpus, cfg, eager_metrics=False)
+    out = run_pipeline(spark, corpus, cfg)
     return out["cluster_sizes"].select("cluster_id", "member_count", "cluster_root")
 
 
@@ -650,10 +650,7 @@ def _q_clone_pipeline_cluster_sizes(spark, sf_dir):
     from sparkclone.pipeline import run_pipeline
 
     corpus = documents_as_corpus(_docs(spark, sf_dir))
-    # eager_metrics=False: per-stage persist+count rounds are an
-    # attribution tool, not part of the query — one job cascade instead
-    # (the r2 bench regression was exactly this eager-metrics floor).
-    out = run_pipeline(spark, corpus, _doc_pipeline_config(), eager_metrics=False)
+    out = run_pipeline(spark, corpus, _doc_pipeline_config())
     return out["cluster_sizes"].select("cluster_id", "member_count", "cluster_root")
 
 

@@ -101,9 +101,7 @@ def main() -> None:
     rows_to_parquet(rows, corpus_path)
 
     t0 = time.perf_counter()
-    out = run_pipeline(
-        spark, load_corpus(spark, corpus_path), benchmark_config(), eager_metrics=False
-    )
+    out = run_pipeline(spark, load_corpus(spark, corpus_path), benchmark_config())
     n_clusters = out["clusters"].select("cluster_id").distinct().count()
     n_findings = out["findings"].count()
     wall = time.perf_counter() - t0
@@ -123,7 +121,7 @@ def main() -> None:
     rows_to_parquet(old_rows, old_path)
     base = run_pipeline(
         spark, load_corpus(spark, old_path), benchmark_config(),
-        checkpoint_dir=f"{tmp}/ck", eager_metrics=False,
+        checkpoint_dir=f"{tmp}/ck",
     )
     base["findings"].count()  # materialize base checkpoints
     t0 = time.perf_counter()

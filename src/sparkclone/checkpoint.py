@@ -7,7 +7,8 @@ the reference memoizes per-snippet vectors in SQLite, we checkpoint whole
 stages as parquet keyed by ``(config_hash, stage)`` — the Iceberg-table
 analogue that makes the job resumable mid-pipeline (north_rule), with a
 ``_metrics`` sidecar recording per-partition row counts (lineage) and
-wall time per stage.
+wall time per stage. Without a root, stages only persist lazily and
+record no metrics rows: every ``StageMetrics`` row carries a real count.
 
 Layout:
     {root}/{config_hash}/{stage}/            parquet data
@@ -134,7 +135,8 @@ class StageMetrics:
 
 @dataclass
 class CheckpointManager:
-    """No-op when root is None (pure in-memory run)."""
+    """Without a root (pure in-memory run) stages persist lazily and record
+    no metrics; with one, each stage is parquet plus a ``StageMetrics`` row."""
 
     spark: SparkSession
     config_hash: str
@@ -146,16 +148,6 @@ class CheckpointManager:
     # done with the outputs — without it, a long-lived session running
     # many pipelines accumulates dead blocks in storage memory.
     aux: list[DataFrame] = field(default_factory=list)
-    # eager=True materializes each in-memory stage with a count() —
-    # exact per-stage wall attribution at the cost of one job round per
-    # stage. eager=False persists lazily: the first downstream action
-    # materializes every cached stage in ONE job cascade (the
-    # coordination-floor saver for benchmark/throughput runs).
-    eager: bool = True
-
-    # free-form per-stage annotations (e.g. per-snippet signature reuse
-    # counts) surfaced to tests/metrics consumers
-    notes: dict = field(default_factory=dict)
 
     def _stage_dir(self, stage: str) -> str | None:
         if self.root is None:
@@ -225,13 +217,10 @@ class CheckpointManager:
         except Exception:  # noqa: BLE001 — unreadable prior checkpoint
             return None
 
-    def has(self, stage: str) -> bool:
-        d = self._stage_dir(stage)
-        return d is not None and fs_exists(self.spark, f"{d}/_SUCCESS")
-
     def load_or_compute(self, stage: str, compute) -> DataFrame:
-        """Return the checkpointed stage if present, else compute, persist,
-        and record per-partition lineage + wall time.
+        """Return the checkpointed stage if present, else compute it: with
+        a root, write it as parquet and record per-partition lineage + wall
+        time; without one, persist it lazily.
 
         A checkpoint that carries a _SUCCESS marker but fails to read
         (truncated/corrupted parquet — e.g. a crash mid-copy or storage
@@ -253,21 +242,15 @@ class CheckpointManager:
                     StageMetrics(stage, n, 0.0, df.rdd.getNumPartitions(), {}, resumed=True)
                 )
                 return df
-        t0 = time.perf_counter()
-        df = compute()
         if d is None:
             # in-memory run: persist so the many downstream actions never
             # recompute the upstream DAG (a cache-evicted block recomputes
-            # its own partition only). With eager=True also materialize
-            # now, so wall_s measures this stage's real compute.
-            df = df.persist()
+            # its own partition only); the first action materializes it
+            df = compute().persist()
             self.aux.append(df)
-            if self.eager:
-                n = df.count()
-                self.metrics.append(StageMetrics(stage, n, time.perf_counter() - t0, -1, {}))
-            else:
-                self.metrics.append(StageMetrics(stage, -1, 0.0, -1, {}))
             return df
+        t0 = time.perf_counter()
+        df = compute()
         df.write.mode("overwrite").parquet(d)  # creates parents itself
         out = self.spark.read.parquet(d)
         part_rows = {

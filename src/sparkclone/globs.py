@@ -104,8 +104,10 @@ def matches(globs: list[str], rel_path: str) -> bool:
 
 
 def glob_predicate(path_col: str | Column, globs: list[str]) -> Column:
-    """JVM-side predicate: path matches ANY of the globs."""
+    """JVM-side predicate: path matches ANY of the globs; a leading ``./``
+    is dropped first, as :func:`matches` does."""
     col = F.col(path_col) if isinstance(path_col, str) else path_col
+    col = F.regexp_replace(col, r"^\./", "")
     pred = F.lit(False)
     for g in globs:
         for rx in glob_to_regexes(g):

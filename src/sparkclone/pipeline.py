@@ -182,22 +182,16 @@ def run_pipeline(
     corpus: DataFrame,
     cfg: PipelineConfig | None = None,
     checkpoint_dir: str | None = None,
-    eager_metrics: bool | None = None,
     snapshot_id: str | None = None,
 ) -> dict[str, DataFrame]:
     """Run the full pipeline; returns every stage as a DataFrame.
 
     With ``checkpoint_dir`` set, each stage is persisted under
     ``{dir}/{config_hash}/{stage}`` and a rerun resumes from the last
-    completed stage (kill/resume test in tests/test_resume.py).
-
-    ``eager_metrics`` controls the per-stage materializing count of
-    in-memory runs (exact per-stage wall attribution at the cost of one
-    job round per stage — a cluster-size-constant coordination floor).
-    Default ``None`` = eager only when ``checkpoint_dir`` is set, where
-    stages materialize to parquet anyway and per-stage walls are the
-    point; pure in-memory throughput runs default to one lazy job
-    cascade. Pass an explicit bool to override either way.
+    completed stage (kill/resume test in tests/test_resume.py), and the
+    returned ``metrics`` holds one ``StageMetrics`` row per stage. Without
+    it, stages persist lazily (the first action on an output materializes
+    them in one job cascade) and no metrics rows are recorded.
     """
     from sparkclone.cluster import (
         attach_clusters,
@@ -217,11 +211,7 @@ def run_pipeline(
     # DIFFERENT corpus snapshot must never resume the old snapshot's
     # stages (the Iceberg analogue keys on snapshot id).
     snap = snapshot_id or corpus_fingerprint(corpus)
-    if eager_metrics is None:
-        eager_metrics = checkpoint_dir is not None
-    ck = CheckpointManager(
-        spark, f"{cfg.config_hash()}-{snap}", checkpoint_dir, eager=eager_metrics
-    )
+    ck = CheckpointManager(spark, f"{cfg.config_hash()}-{snap}", checkpoint_dir)
 
     # The extraction stage is the Python-kernel-bound one (ast parsing in
     # mapInPandas): make sure it runs at full parallelism even when the
@@ -307,9 +297,6 @@ def run_pipeline(
                 F.concat_ws("/", "repo", "path") == F.col("__ufp"),
                 "left_anti",
             )
-            if ck.eager:
-                ck.notes["snippet_files_reused"] = unchanged_fp.count()
-                ck.notes["snippet_files_extracted"] = fresh_src.count()
         s = extract_snippets(fresh_src, cfg.windows, normalize=cfg.normalize_text)
         if cfg.expansion.enabled and cfg.expansion.depth > 0:
             from sparkclone.expansion import call_edges, expand_from_facts, file_facts
@@ -364,12 +351,6 @@ def run_pipeline(
             *fresh_cols
         )
         misses = todo.join(prior.select("snippet_id"), "snippet_id", "left_anti")
-        if ck.eager:
-            # attribution counters only in eager runs: each count() is an
-            # extra job round (prior scan + joins) — the same per-stage
-            # coordination floor eager_metrics=False exists to remove
-            ck.notes["signatures_reused"] = hits.count()
-            ck.notes["signatures_computed"] = misses.count()
         return hits.unionByName(with_signatures(misses, cfg.signature))
 
     signatures = ck.load_or_compute("signatures", _signatures)

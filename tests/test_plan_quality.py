@@ -130,7 +130,7 @@ def test_single_row_group_corpus_extracts_in_parallel(spark, corpus_rows, tmp_pa
     dist = corpus.groupBy(F.spark_partition_id().alias("p")).count().collect()
     assert len([r for r in dist if r["count"] > 0]) == 1
 
-    out = run_pipeline(spark, corpus, benchmark_config(), eager_metrics=False)
+    out = run_pipeline(spark, corpus, benchmark_config())
     sdist = (
         out["snippets"].groupBy(F.spark_partition_id().alias("p")).count().collect()
     )

@@ -30,6 +30,8 @@ def test_run_pipeline_release_frees_all_caches(spark, corpus_parquet):
     out["findings"].count()
     out["cluster_sizes"].count()
     out["bucket_stats"].count()
+    # in-memory stages persist lazily and record no metrics rows
+    assert out["metrics"].metrics == []
 
     during = _cached_rdd_ids(spark)
     new_plain = [i for i, is_lc in during.items() if i not in before and not is_lc]

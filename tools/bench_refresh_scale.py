@@ -63,8 +63,7 @@ def main() -> None:
         rows_to_parquet(new_rows, new_pq)
 
         base = run_pipeline(
-            spark, load_corpus(spark, old_pq), cfg,
-            checkpoint_dir=f"{tmp}/ck", eager_metrics=False,
+            spark, load_corpus(spark, old_pq), cfg, checkpoint_dir=f"{tmp}/ck"
         )
         base["findings"].count()
         probe = incremental_scan_probe(

@@ -7,6 +7,9 @@ Launched via spark-submit --py-files (see tools/run_scaling.sh):
 
 Runs the full pipeline on the given corpus, measures wall time and
 per-stage breakdown, and appends one JSON line to <out.json>. The
+``stages`` field holds per-stage walls only when a checkpoint root is
+given: with ``-`` (what run_scaling.sh passes) stages persist lazily
+in memory, record no metrics rows, and ``stages`` is empty. The
 companion shell script runs N=8 and 4N=32 on the identical input and
 computes scaling efficiency (T_8 / T_32) / 4.
 """
@@ -34,17 +37,9 @@ def main() -> None:
     corpus = load_corpus(spark, corpus_path)
     n_files = corpus.count()
 
-    import os
-
-    # default: lazy stage materialization (one job cascade — the
-    # coordination floor shrinker); SPARKCLONE_STAGE_METRICS=1 restores
-    # eager per-stage counts for attribution runs.
-    eager = os.environ.get("SPARKCLONE_STAGE_METRICS", "0") == "1"
     t0 = time.perf_counter()
     out = run_pipeline(
-        spark, corpus, cfg,
-        checkpoint_dir=None if ck_root == "-" else ck_root,
-        eager_metrics=eager,
+        spark, corpus, cfg, checkpoint_dir=None if ck_root == "-" else ck_root
     )
     # materialize the full result (findings + clusters)
     n_findings = out["findings"].count()
