@@ -7,8 +7,9 @@ the reference memoizes per-snippet vectors in SQLite, we checkpoint whole
 stages as parquet keyed by ``(config_hash, stage)`` — the Iceberg-table
 analogue that makes the job resumable mid-pipeline (north_rule), with a
 ``_metrics`` sidecar recording per-partition row counts (lineage) and
-wall time per stage. Without a root, stages only persist lazily and
-record no metrics rows: every ``StageMetrics`` row carries a real count.
+wall time per stage. Without a root, each stage is an eager local
+checkpoint — a lineage cut held in executor block storage — and records no
+metrics rows: every ``StageMetrics`` row carries a real count.
 
 Layout:
     {root}/{config_hash}/{stage}/            parquet data
@@ -135,19 +136,31 @@ class StageMetrics:
 
 @dataclass
 class CheckpointManager:
-    """Without a root (pure in-memory run) stages persist lazily and record
-    no metrics; with one, each stage is parquet plus a ``StageMetrics`` row."""
+    """Without a root (pure in-memory run) each stage is cut from its
+    upstream plan by an eager local checkpoint and records no metrics; with
+    one, each stage is parquet plus a ``StageMetrics`` row.
+
+    Either way a stage boundary is a lineage cut: every later action plans
+    over a scan of the stage, never over the whole upstream DAG, which the
+    driver would otherwise re-analyze and re-plan for each action. The
+    trade: a local checkpoint is not recomputed when an executor is lost,
+    so a run that must survive executor loss passes a checkpoint root.
+
+    ``release()`` frees everything the run holds, stage checkpoints
+    included; the returned frames must not be read after it (a read then
+    fails with ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``)."""
 
     spark: SparkSession
     config_hash: str
     root: str | None = None
     metrics: list[StageMetrics] = field(default_factory=list)
-    # DataFrames persisted during the run (in-memory stage caches +
-    # auxiliary persists registered by operators, e.g. the LSH bucket-size
-    # aggregate). ``release()`` unpersists them all once the caller is
-    # done with the outputs — without it, a long-lived session running
-    # many pipelines accumulates dead blocks in storage memory.
+    # DataFrames persisted during the run by operators (e.g. the LSH
+    # bucket-size aggregate), and the in-memory stage checkpoints (cuts).
+    # ``release()`` frees both once the caller is done with the outputs —
+    # without it, a long-lived session running many pipelines accumulates
+    # dead blocks in storage memory.
     aux: list[DataFrame] = field(default_factory=list)
+    cuts: list[DataFrame] = field(default_factory=list, init=False)
 
     def _stage_dir(self, stage: str) -> str | None:
         if self.root is None:
@@ -220,7 +233,8 @@ class CheckpointManager:
     def load_or_compute(self, stage: str, compute) -> DataFrame:
         """Return the checkpointed stage if present, else compute it: with
         a root, write it as parquet and record per-partition lineage + wall
-        time; without one, persist it lazily.
+        time; without one, cut it with an eager local checkpoint (computed
+        now, in executor block storage, freed by :meth:`release`).
 
         A checkpoint that carries a _SUCCESS marker but fails to read
         (truncated/corrupted parquet — e.g. a crash mid-copy or storage
@@ -243,11 +257,11 @@ class CheckpointManager:
                 )
                 return df
         if d is None:
-            # in-memory run: persist so the many downstream actions never
-            # recompute the upstream DAG (a cache-evicted block recomputes
-            # its own partition only); the first action materializes it
-            df = compute().persist()
-            self.aux.append(df)
+            # in-memory run: not persist(), which keeps the upstream plan
+            # and so makes the driver re-analyze and re-plan the whole
+            # cascade for every later action; the checkpoint is a scan leaf
+            df = compute().localCheckpoint(eager=True)
+            self.cuts.append(df)
             return df
         t0 = time.perf_counter()
         df = compute()
@@ -275,18 +289,28 @@ class CheckpointManager:
         return out
 
     def release(self) -> None:
-        """Unpersist every DataFrame cached during the run (stage caches +
-        operator aux persists). Call when the outputs have been consumed;
-        afterwards the returned DataFrames recompute from source if used
-        again. localCheckpoint()ed frames are NOT touched — their cached
-        blocks ARE the truncated lineage and unpersisting would invalidate
-        still-referenced results."""
+        """Free every block the run holds: operator aux persists and the
+        in-memory stage checkpoints. Call only once the outputs have been
+        consumed: every frame the run returned reads a stage checkpoint,
+        so a read after this fails with ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``
+        instead of recomputing. Parquet stages are not touched, and neither
+        are the local checkpoints operators take inside a stage (the
+        distributed connected-components loop, the expansion BFS): once the
+        stage is cut they are unreachable, and their blocks stay pinned
+        until Spark's context cleaner drops them after a driver GC."""
         for df in self.aux:
             try:
                 df.unpersist()
             except Exception:  # noqa: BLE001 — session already stopped
                 pass
+        for df in self.cuts:
+            try:
+                # the checkpoint RDD behind the frame's LogicalRDD leaf
+                df._jdf.queryExecution().analyzed().rdd().unpersist(True)  # noqa: SLF001
+            except Exception:  # noqa: BLE001 — session already stopped
+                pass
         self.aux.clear()
+        self.cuts.clear()
 
     def write_metrics_table(self) -> None:
         if self.root is None:

@@ -190,8 +190,12 @@ def run_pipeline(
     ``{dir}/{config_hash}/{stage}`` and a rerun resumes from the last
     completed stage (kill/resume test in tests/test_resume.py), and the
     returned ``metrics`` holds one ``StageMetrics`` row per stage. Without
-    it, stages persist lazily (the first action on an output materializes
-    them in one job cascade) and no metrics rows are recorded.
+    it, each stage is computed here and held as an eager local checkpoint
+    (no metrics rows are recorded): later actions plan over the stage,
+    not over the whole upstream DAG. Those blocks are not recomputed if an
+    executor is lost — pass ``checkpoint_dir`` when the run must survive
+    that. ``out["metrics"].release()`` frees them; read no returned frame
+    after it.
     """
     from sparkclone.cluster import (
         attach_clusters,
@@ -301,12 +305,8 @@ def run_pipeline(
         if cfg.expansion.enabled and cfg.expansion.depth > 0:
             from sparkclone.expansion import call_edges, expand_from_facts, file_facts
 
-            facts = ck.load_or_compute(
-                "call_facts", lambda: file_facts(src).localCheckpoint(eager=True)
-            )
-            call_edge_df = ck.load_or_compute(
-                "call_edges", lambda: call_edges(facts).localCheckpoint(eager=True)
-            )
+            facts = ck.load_or_compute("call_facts", lambda: file_facts(src))
+            call_edge_df = ck.load_or_compute("call_edges", lambda: call_edges(facts))
             s = s.unionByName(
                 expand_from_facts(facts, cfg.expansion, edges=call_edge_df)
             )

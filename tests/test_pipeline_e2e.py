@@ -85,7 +85,15 @@ def test_candidate_pairs_canonical(pipeline_output):
 
 
 def test_verified_scores_clear_thresholds(pipeline_output):
+    from sparkclone.config import benchmark_config
+    from sparkclone.verify import threshold_col
+
+    # the verified stage does not carry the threshold: derive it per pair
+    # from the two kinds, as verify_pairs does
+    kind_threshold = threshold_col(
+        F.col("kind_a"), F.col("kind_b"), benchmark_config().thresholds
+    )
     bad = pipeline_output["verified"].where(
-        (F.col("jaccard") < 0.5) | (F.col("jaccard") < F.col("kind_threshold"))
+        (F.col("jaccard") < 0.5) | (F.col("jaccard") < kind_threshold)
     )
     assert bad.count() == 0

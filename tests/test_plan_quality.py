@@ -139,3 +139,18 @@ def test_single_row_group_corpus_extracts_in_parallel(spark, corpus_rows, tmp_pa
         f"extraction not spread: {sdist}"
     )
     out["metrics"].release()
+
+
+def test_in_memory_findings_plan_is_cut(spark, corpus_df):
+    """In-memory stages are lineage cuts: the findings a run returns must
+    plan over a checkpoint scan, not re-embed the extraction, signature
+    and verification DAG (which every later action would re-analyze and
+    re-plan on the driver)."""
+    from sparkclone.config import benchmark_config
+    from sparkclone.pipeline import run_pipeline
+
+    out = run_pipeline(spark, corpus_df, benchmark_config())
+    plan = _optimized(out["findings"])
+    for node in ("MapInPandas", "ArrowEvalPython", "InMemoryRelation"):
+        assert node not in plan, plan
+    out["metrics"].release()

@@ -222,3 +222,22 @@ def test_config_hash_isolates_checkpoints(spark, corpus_parquet, tmp_path):
     run_pipeline(spark, corpus, cfg_a, checkpoint_dir=ck)
     out_b = run_pipeline(spark, corpus, cfg_b, checkpoint_dir=ck)
     assert not any(m.resumed for m in out_b["metrics"].metrics)
+
+
+def test_in_memory_run_matches_checkpointed_run(spark, corpus_parquet, tmp_path):
+    """The two stage routes (eager local checkpoints vs parquet) must give
+    the same findings and the same cluster membership."""
+    corpus = load_corpus(spark, corpus_parquet)
+    cfg = benchmark_config()
+
+    def membership(out):
+        rows = out["clusters"].select("unit_id", "cluster_id", "cluster_root").collect()
+        return sorted(tuple(r) for r in rows)
+
+    mem = run_pipeline(spark, corpus, cfg)
+    mem_key, mem_members = _findings_key(mem), membership(mem)
+    mem["metrics"].release()
+    ck = run_pipeline(spark, corpus, cfg, checkpoint_dir=str(tmp_path / "ck"))
+    assert mem_key and mem_members
+    assert _findings_key(ck) == mem_key
+    assert membership(ck) == mem_members
