@@ -185,14 +185,14 @@ def main() -> None:
     out["metrics"].release()
     base["metrics"].release()
     probe["release"]()
-    # run_pipeline's release() frees its stage checkpoints, but the
-    # probe's release() skips its localCheckpoint blocks (they ARE the
-    # truncated lineage of still-referenced frames), so the probe/hop2
-    # sections leave their blocks pinned in storage memory for the rest
-    # of the suite — squeezing execution memory for clone_docs/srp (the
-    # round-4 regression signature). None of those frames is used below,
-    # so drop every pinned RDD before the downstream sections. (The
-    # second call drops what the unreleased query sections leave.)
+    # run_pipeline's and the probe's release() free their stage cuts and
+    # persists. What no owner frees stays pinned in storage memory for the
+    # rest of the suite — squeezing execution memory for clone_docs/srp
+    # (the round-4 regression signature): the resolved hop-2 base frames
+    # load_probe_stages persisted, and the local checkpoints operators
+    # take inside a stage. None of those frames is used below, so drop
+    # every pinned RDD before the downstream sections. (The second call
+    # drops what the unreleased query sections leave.)
     def _drop_pinned() -> None:
         for jrdd in list(
             spark.sparkContext._jsc.getPersistentRDDs().values()  # noqa: SLF001

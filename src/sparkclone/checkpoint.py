@@ -290,14 +290,16 @@ class CheckpointManager:
 
     def release(self) -> None:
         """Free every block the run holds: operator aux persists and the
-        in-memory stage checkpoints. Call only once the outputs have been
-        consumed: every frame the run returned reads a stage checkpoint,
-        so a read after this fails with ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``
-        instead of recomputing. Parquet stages are not touched, and neither
-        are the local checkpoints operators take inside a stage (the
-        distributed connected-components loop, the expansion BFS): once the
-        stage is cut they are unreachable, and their blocks stay pinned
-        until Spark's context cleaner drops them after a driver GC."""
+        in-memory stage checkpoints — a pipeline run's stages, or every cut
+        of an incremental probe, which takes its cuts through this manager
+        too. Call only once the outputs have been consumed: every frame the
+        run returned reads a stage checkpoint, so a read after this fails
+        with ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND`` instead of recomputing.
+        Parquet stages are not touched, and neither are the local
+        checkpoints operators take inside a stage (the distributed
+        connected-components loop, the expansion BFS): once the stage is
+        cut they are unreachable, and their blocks stay pinned until
+        Spark's context cleaner drops them after a driver GC."""
         for df in self.aux:
             try:
                 df.unpersist()

@@ -154,3 +154,91 @@ def test_in_memory_findings_plan_is_cut(spark, corpus_df):
     for node in ("MapInPandas", "ArrowEvalPython", "InMemoryRelation"):
         assert node not in plan, plan
     out["metrics"].release()
+
+
+def _probe_hop(spark, rows, old_rows, tmp, key, stages, tag):
+    """One rolling-base hop: probe ``rows`` against ``old_rows`` over the
+    artifact stages loaded from ``key``, commit it as a delta at a new key.
+    Returns (probe outputs, new key)."""
+    from sparkclone.config import benchmark_config
+    from sparkclone.corpus import rows_to_parquet
+    from sparkclone.incremental import incremental_scan_probe, persist_probe_artifacts
+    from sparkclone.pipeline import load_corpus
+
+    new_pq, old_pq = f"{tmp}/{tag}-new.parquet", f"{tmp}/{tag}-old.parquet"
+    rows_to_parquet(rows, new_pq)
+    rows_to_parquet(old_rows, old_pq)
+    probe = incremental_scan_probe(
+        spark, load_corpus(spark, new_pq), stages["snippets"], stages["signatures"],
+        load_corpus(spark, old_pq), benchmark_config(),
+    )
+    new_key = f"{tmp}/ck/{tag}"
+    persist_probe_artifacts(probe, new_key, spark=spark, base_key_dir=key)
+    return probe, new_key
+
+
+def test_probe_diff_findings_plan_is_cut(spark, corpus_df):
+    """The probe's diff findings plan over its findings cut: no Python
+    operator (extraction, signing, LCS) is re-planned or re-run by an
+    action that consumes them."""
+    from sparkclone.config import benchmark_config
+    from sparkclone.incremental import incremental_scan_probe
+    from sparkclone.pipeline import run_pipeline
+
+    old = corpus_df.where("path not like '%exact_2%'")
+    base = run_pipeline(spark, old, benchmark_config())
+    probe = incremental_scan_probe(
+        spark, corpus_df, base["snippets"], base["signatures"], old, benchmark_config()
+    )
+    plan = _optimized(probe["diff_findings"])
+    for node in ("MapInPandas", "ArrowEvalPython"):
+        assert node not in plan, plan
+    assert probe["diff_findings"].count() > 0
+    probe["release"]()
+    base["metrics"].release()
+
+
+def test_delta_chain_keeps_base_partition_count(spark, corpus_rows, tmp_path):
+    """Each delta hop adds its add files to the resolved stages; after two
+    hops load_probe_stages must still return snippets and signatures in no
+    more partitions than the depth-0 parquet read — every extra near-empty
+    partition is a task in every probe stage downstream."""
+    import dataclasses
+
+    from sparkclone.config import benchmark_config
+    from sparkclone.corpus import rows_to_parquet
+    from sparkclone.incremental import load_probe_stages
+    from sparkclone.pipeline import load_corpus, run_pipeline
+
+    tmp = str(tmp_path)
+    v0 = [r for r in corpus_rows if r.path != "pkg/exact_2.py"]
+    v1 = list(corpus_rows)
+    v2 = [
+        dataclasses.replace(r, content=r.content + "\n# touched\n")
+        if r.path == "pkg/near_90.py" else r
+        for r in v1
+    ] + [dataclasses.replace(corpus_rows[0], path="pkg/hop2_copy.py")]
+    rows_to_parquet(v0, f"{tmp}/v0.parquet")
+    base = run_pipeline(
+        spark, load_corpus(spark, f"{tmp}/v0.parquet"), benchmark_config(),
+        checkpoint_dir=f"{tmp}/ck",
+    )
+    base["findings"].count()
+    key0 = f"{tmp}/ck/{base['metrics'].config_hash}"
+    stages = ["snippets", "signatures"]
+
+    probe1, key1 = _probe_hop(
+        spark, v1, v0, tmp, key0, load_probe_stages(spark, key0, stages), "hop1"
+    )
+    loaded1 = load_probe_stages(spark, key1, stages)
+    probe2, key2 = _probe_hop(spark, v2, v1, tmp, key1, loaded1, "hop2")
+    loaded2 = load_probe_stages(spark, key2, stages)
+    for stage in stages:
+        depth0 = spark.read.parquet(f"{key0}/{stage}").rdd.getNumPartitions()
+        got = loaded2[stage].rdd.getNumPartitions()
+        assert got <= depth0, f"{stage}: {got} partitions after two hops, depth-0 read {depth0}"
+    for df in [*loaded1.values(), *loaded2.values()]:
+        df.unpersist()
+    probe1["release"]()
+    probe2["release"]()
+    base["metrics"].release()
