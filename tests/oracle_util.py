@@ -10,12 +10,20 @@ Note: the reference's progress wrapper is a generator function whose
 when tqdm is absent — i.e. WITHOUT tqdm the reference processes zero files.
 tqdm is not installed here, so we register a minimal stand-in before
 importing the reference.
+
+Every reference import goes through ``import_reference``: it skips the
+calling test where the reference tree is absent, and otherwise imports the
+named module the ordinary way, so a broken or renamed module fails loudly.
 """
 
 from __future__ import annotations
 
+import importlib
 import sys
 import types
+from pathlib import Path
+
+import pytest
 
 REFERENCE_SRC = "/root/reference/src"
 
@@ -42,6 +50,20 @@ def _install_tqdm_stub() -> None:
     sys.modules["tqdm"] = mod
 
 
+def import_reference(module: str) -> types.ModuleType:
+    """Import `module` from the reference tree at ``REFERENCE_SRC``.
+
+    Skips the calling test only when the tree's ``clonehunter`` package
+    directory is absent; with the tree present, a missing module raises
+    ``ModuleNotFoundError``."""
+    if not Path(REFERENCE_SRC, "clonehunter").is_dir():
+        pytest.skip(f"reference tree {REFERENCE_SRC} is absent")
+    _install_tqdm_stub()
+    if REFERENCE_SRC not in sys.path:
+        sys.path.insert(0, REFERENCE_SRC)
+    return importlib.import_module(module)
+
+
 def run_reference_oracle(
     root: str,
     window=(12, 6, 4),
@@ -59,42 +81,30 @@ def run_reference_oracle(
       clusters  — cluster_id -> set of identities
       stats     — reference ScanStats
     """
-    _install_tqdm_stub()
-    if REFERENCE_SRC not in sys.path:
-        sys.path.insert(0, REFERENCE_SRC)
-
-    from clonehunter.core.config import (
-        CloneHunterConfig,
-        EmbedderConfig,
-        ExpansionConfig,
-        IndexConfig,
-        Thresholds,
-        WindowConfig,
-    )
-    from clonehunter.core.pipeline import run_pipeline as ref_run
+    config = import_reference("clonehunter.core.config")
+    ref_run = import_reference("clonehunter.core.pipeline").run_pipeline
 
     # Force single-process retrieval: the reference's spawn pool
     # (candidates.py:52-74) re-imports __main__, which recurses when the
     # caller is a script, and single-process is deterministic anyway.
-    import clonehunter.similarity.candidates as _cand
-
+    _cand = import_reference("clonehunter.similarity.candidates")
     _cand.cpu_count = lambda: 2  # max(1, 2-1) == 1 worker -> inline path
 
-    cfg = CloneHunterConfig(
+    cfg = config.CloneHunterConfig(
         include_globs=["**/*.py", "**/*.ts", "**/*.js", "**/*.txt", "**/*.go", "**/*.java"],
         exclude_globs=[],
-        windows=WindowConfig(*window),
-        thresholds=Thresholds(
+        windows=config.WindowConfig(*window),
+        thresholds=config.Thresholds(
             func=0.92, win=0.90, exp=0.90, min_window_hits=1,
             lexical_min_ratio=0.5, lexical_weight=1.0,
         ),
-        index=IndexConfig(name="brute", top_k=1_000_000),
-        embedder=EmbedderConfig(name="stub"),
+        index=config.IndexConfig(name="brute", top_k=1_000_000),
+        embedder=config.EmbedderConfig(name="stub"),
         cluster_findings=True,
         expansion=(
-            ExpansionConfig(enabled=True, depth=expansion[0], max_chars=expansion[1])
+            config.ExpansionConfig(enabled=True, depth=expansion[0], max_chars=expansion[1])
             if expansion
-            else ExpansionConfig()
+            else config.ExpansionConfig()
         ),
     )
     res = ref_run([root], cfg)

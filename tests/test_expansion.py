@@ -14,7 +14,7 @@ from pathlib import Path
 
 import pytest
 
-from oracle_util import REFERENCE_SRC, _install_tqdm_stub
+from oracle_util import import_reference
 
 # Scenario corpus (own content, reference-shaped scenarios): local calls,
 # from-import function alias, module-alias call, imported-class instance
@@ -118,19 +118,14 @@ def corpus_df(spark):
 
 def _reference_exp(root: str, depth: int, max_chars: int):
     """identity(relative) -> token set of the reference EXP snippet text."""
-    import sys
-
-    _install_tqdm_stub()
-    if REFERENCE_SRC not in sys.path:
-        sys.path.insert(0, REFERENCE_SRC)
-    from clonehunter.io.fs import collect_files
-    from clonehunter.parsing.python_ast import extract_functions
-    from clonehunter.snippets.expansion import ExpansionParams, expand_calls
+    collect_files = import_reference("clonehunter.io.fs").collect_files
+    extract_functions = import_reference("clonehunter.parsing.python_ast").extract_functions
+    exp = import_reference("clonehunter.snippets.expansion")
 
     files = collect_files([root], ["**/*.py"], [])
     functions = [fn for f in files for fn in extract_functions(f)]
-    snippets = expand_calls(
-        functions, ExpansionParams(enabled=True, depth=depth, max_chars=max_chars)
+    snippets = exp.expand_calls(
+        functions, exp.ExpansionParams(enabled=True, depth=depth, max_chars=max_chars)
     )
     prefix = str(Path(root)) + "/"
     return {

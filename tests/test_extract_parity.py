@@ -7,26 +7,17 @@ we hash repo-qualified corpus paths), so the comparison key is
 
 from __future__ import annotations
 
-import sys
-
 import pytest
 
-sys.path.insert(0, "/root/reference/src")
+from oracle_util import import_reference
 
 
 @pytest.fixture(scope="module")
 def ref_snippets(corpus_dir):
-    from oracle_util import _install_tqdm_stub
-
-    _install_tqdm_stub()
-    from clonehunter.io.fs import collect_files
-    from clonehunter.parsing.python_ast import extract_functions
-    from clonehunter.parsing.text_units import extract_file_unit
-    from clonehunter.snippets.generators import (
-        WindowParams,
-        generate_function_snippets,
-        generate_window_snippets,
-    )
+    collect_files = import_reference("clonehunter.io.fs").collect_files
+    extract_functions = import_reference("clonehunter.parsing.python_ast").extract_functions
+    extract_file_unit = import_reference("clonehunter.parsing.text_units").extract_file_unit
+    gen = import_reference("clonehunter.snippets.generators")
 
     files = collect_files(
         [corpus_dir], ["**/*.py", "**/*.ts", "**/*.js", "**/*.txt"], []
@@ -39,8 +30,8 @@ def ref_snippets(corpus_dir):
             wunits.extend(ex)
         else:
             wunits.extend(extract_file_unit(f))
-    snippets = generate_function_snippets(pyfn)
-    snippets += generate_window_snippets(wunits, WindowParams(12, 6, 4))
+    snippets = gen.generate_function_snippets(pyfn)
+    snippets += gen.generate_window_snippets(wunits, gen.WindowParams(12, 6, 4))
     prefix = corpus_dir.rstrip("/") + "/"
     return {
         (

@@ -2,14 +2,11 @@
 
 from __future__ import annotations
 
-import sys
 from pathlib import Path
 
-sys.path.insert(0, "/root/reference/src")
+from oracle_util import import_reference
 
-from clonehunter.io.fs import _matches as ref_matches  # noqa: E402
-
-from sparkclone.globs import matches as our_matches  # noqa: E402
+from sparkclone.globs import matches as our_matches
 
 GLOBS = [
     ["**/*.py"],
@@ -45,6 +42,7 @@ PATHS = [
 
 
 def test_glob_parity_vs_reference():
+    ref_matches = import_reference("clonehunter.io.fs")._matches
     mismatches = []
     for globs in GLOBS:
         for p in PATHS:

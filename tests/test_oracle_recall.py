@@ -13,8 +13,12 @@ import pytest
 from oracle_util import cluster_implied_pairs, run_reference_oracle
 
 
-@pytest.fixture(scope="module")
+@pytest.fixture(scope="session")
 def oracle(corpus_dir):
+    # Session scope, like `pipeline_output`: pytest sets up wider scopes
+    # first, so only at equal scope does the tests' `(oracle,
+    # pipeline_output)` order hold, and a host without the reference tree
+    # skips before paying for the full pipeline run.
     return run_reference_oracle(corpus_dir)
 
 
