@@ -167,10 +167,14 @@ class CheckpointManager:
             return None
         return f"{self.root}/{self.config_hash}/{stage}"
 
-    def find_prior_stage(self, stage: str) -> DataFrame | None:
-        """Most recent COMPLETED checkpoint of ``stage`` written under the
-        same config hash but a different input snapshot (key format is
-        ``{config_hash}-{snapshot}``).
+    def find_prior_stages(self, stages: list[str]) -> dict[str, DataFrame] | None:
+        """The most recent COMPLETED checkpoints of ``stages`` written
+        under the same config hash but a different input snapshot (key
+        format is ``{config_hash}-{snapshot}``), all from the SAME prior
+        key: the latest, by the newest _SUCCESS mtime among its stages,
+        that completed every one. Consistency matters when one stage is
+        the validity manifest for another (e.g. ``file_manifest`` keys
+        ``snippets`` reuse).
 
         This is the cross-snapshot reuse seed for content-addressed
         stages: a snippet_id is deterministic in (path, span, code hash),
@@ -179,38 +183,13 @@ class CheckpointManager:
         left-anti-join analogue of the reference's per-snippet embedding
         cache (core/pipeline.py:50-88). Callers must only apply it to
         stages keyed by such content-addressed ids."""
-        if self.root is None:
-            return None
-        cfg_prefix = self.config_hash.split("-")[0]
-        # glob the _SUCCESS markers themselves: completion check and
-        # listing in one round trip, and the marker's mtime IS the
-        # stage-completed time (object stores have no dir mtime at all)
-        matches = fs_glob_status(
-            self.spark, f"{self.root}/{cfg_prefix}-*/{stage}/_SUCCESS"
-        )
-        candidates = [
-            (p[: -len("/_SUCCESS")], mtime)
-            for p, mtime in matches
-            if f"/{self.config_hash}/" not in p
-        ]
-        if not candidates:
-            return None
-        latest = max(candidates, key=lambda c: c[1])[0]
-        try:
-            return self.spark.read.parquet(latest)
-        except Exception:  # noqa: BLE001 — unreadable prior checkpoint
-            return None
-
-    def find_prior_stages(self, stages: list[str]) -> dict[str, DataFrame] | None:
-        """Like :meth:`find_prior_stage`, but all ``stages`` must come
-        from the SAME prior snapshot key (latest key, by the newest
-        _SUCCESS mtime among its stages, that completed every one) —
-        consistency matters when one stage is the validity manifest for
-        another (e.g. ``file_manifest`` keys ``snippets`` reuse)."""
         if self.root is None or not stages:
             return None
         cfg_prefix = self.config_hash.split("-")[0]
         keys: dict[str, dict[str, int]] = {}
+        # glob the _SUCCESS markers themselves: completion check and
+        # listing in one round trip, and the marker's mtime IS the
+        # stage-completed time (object stores have no dir mtime at all)
         for stage in stages:
             for p, mtime in fs_glob_status(
                 self.spark, f"{self.root}/{cfg_prefix}-*/{stage}/_SUCCESS"

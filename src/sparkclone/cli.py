@@ -233,11 +233,14 @@ def main(argv: list[str] | None = None) -> int:
 
     from sparkclone.checkpoint import corpus_fingerprint
 
-    snapshot_id = hashlib.sha256(
-        "\x1f".join(
-            [corpus_fingerprint(corpus), *sorted(include_globs), "\x1e", *sorted(exclude_globs)]
-        ).encode("utf-8")
-    ).hexdigest()[:12]
+    def snapshot_key(df) -> str:
+        return hashlib.sha256(
+            "\x1f".join(
+                [corpus_fingerprint(df), *sorted(include_globs), "\x1e", *sorted(exclude_globs)]
+            ).encode("utf-8")
+        ).hexdigest()[:12]
+
+    snapshot_id = snapshot_key(corpus)
 
     if args.command == "diff":
         from sparkclone.incremental import incremental_scan, incremental_scan_probe
@@ -251,16 +254,10 @@ def main(argv: list[str] | None = None) -> int:
         # scan command used (config hash + base corpus fingerprint +
         # globs), so stale/mismatched artifacts can never be probed.
         base_stages = None
-        if getattr(args, "base_artifacts", None):
-            base_snap = hashlib.sha256(
-                "\x1f".join(
-                    [corpus_fingerprint(base), *sorted(include_globs), "\x1e",
-                     *sorted(exclude_globs)]
-                ).encode("utf-8")
-            ).hexdigest()[:12]
+        if args.base_artifacts:
             from sparkclone.incremental import load_probe_stages
 
-            key_dir = f"{args.base_artifacts}/{cfg.config_hash()}-{base_snap}"
+            key_dir = f"{args.base_artifacts}/{cfg.config_hash()}-{snapshot_key(base)}"
             needed = ["snippets", "signatures"]
             # EXP probe also needs the call facts — same condition under
             # which run_pipeline writes them (enabled AND depth > 0; an

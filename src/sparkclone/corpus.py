@@ -125,7 +125,7 @@ def generate_corpus_rows(
     add(repos[0], "pkg/near_base.py", "python", base_src, "near:1.00")
     for level, frac in [(0.95, 0.04), (0.90, 0.08), (0.85, 0.14), (0.70, 0.30), (0.45, 0.65)]:
         variant = _rename_fraction(base_src, base_idents, frac, rng)
-        repo = repos[1 + int(level * 10) % len(repos)]
+        repo = repos[(1 + int(level * 10)) % len(repos)]
         add(repo, f"pkg/near_{int(level * 100)}.py", "python", variant, f"near:{level:.2f}")
 
     # --- windowed clones: shared block inside different files ------------

@@ -60,7 +60,7 @@ def diff_filter_findings(findings: DataFrame, changed: DataFrame) -> DataFrame:
 PROBE_ARTIFACT_STAGES = (
     "snippets", "signatures", "call_facts", "call_edges", "file_manifest"
 )
-# delta-commit log filename + default compaction threshold: a chain of
+# delta-commit log filename + compaction threshold: a chain of
 # k delta hops makes every artifact read apply k layers of
 # (anti-join tombstones + union add) on top of the last full write, so
 # past this depth the refresh compacts (writes the merged frames fully)
@@ -100,10 +100,26 @@ def _probe_stage_chain(spark, key_dir: str, stage: str) -> list | None:
     return None if base is None else base + [(key_dir, entry)]
 
 
+def apply_delta(base: DataFrame, add: DataFrame, tombs: list[DataFrame]) -> DataFrame:
+    """One commit of an artifact stage: ``base ∖ tombs ∪ add``. This is
+    the one merge rule of the rolling base: the probe builds each merged
+    stage with it, and :func:`load_probe_stages` replays each committed
+    delta with it, so the next hop reads exactly the state this hop
+    computed.
+
+    Each tombstone is a broadcast-size key frame whose columns are the
+    anti-join keys. The result keeps ``base``'s column order (a
+    using-column join moves its keys first), because checkpointed stage
+    schemas must stay byte-stable."""
+    kept = base
+    for tomb in tombs:
+        kept = kept.join(F.broadcast(tomb), tomb.columns, "left_anti")
+    return kept.select(*base.columns).unionByName(add)
+
+
 def _read_probe_chain(spark, stage: str, chain: list) -> DataFrame:
-    """Read a stage from its commit chain: the root's parquet, then per
-    delta commit each tombstone as a broadcast anti-join on the tombstone
-    frame's own columns, and the add rows unioned in.
+    """Read a stage from its commit chain: the root's parquet, then each
+    delta commit applied with :func:`apply_delta`.
 
     Add frames are read with the root's schema (inferring it would run a
     footer job per file set), and the result is coalesced to the root
@@ -116,10 +132,11 @@ def _read_probe_chain(spark, stage: str, chain: list) -> DataFrame:
         return df
     n_parts, schema = df.rdd.getNumPartitions(), df.schema
     for key_dir, entry in chain[1:]:
-        for tomb_dir in entry.get("tombs", []):
-            tomb = spark.read.parquet(f"{key_dir}/{tomb_dir}")
-            df = df.join(F.broadcast(tomb), tomb.columns, "left_anti")
-        df = df.unionByName(spark.read.schema(schema).parquet(f"{key_dir}/{entry['add']}"))
+        df = apply_delta(
+            df,
+            add=spark.read.schema(schema).parquet(f"{key_dir}/{entry['add']}"),
+            tombs=[spark.read.parquet(f"{key_dir}/{t}") for t in entry.get("tombs", [])],
+        )
     return df.coalesce(n_parts)
 
 
@@ -153,71 +170,36 @@ def load_probe_stages(
 
 
 def persist_probe_artifacts(
-    out: dict,
-    key_dir: str,
-    spark=None,
-    base_key_dir: str | None = None,
-    max_chain: int | None = None,
+    out: dict, key_dir: str, spark, base_key_dir: str
 ) -> list[str]:
-    """Commit a probe run's artifact state under a NEW snapshot's key so
-    successive diffs chain (rolling-base diffs — round-3 verdict missing
-    #1), in one of two layouts:
+    """Commit a probe hop's artifact state under the NEW snapshot's key,
+    on top of the base key it probed, so successive diffs chain on a
+    rolling base: the plain-parquet form of an Iceberg append/delete
+    commit, whose cost scales with the diff, not the corpus.
 
-    **Delta commit** (when ``spark`` + ``base_key_dir`` are supplied and
-    the probe returned ``artifact_deltas``): write ONLY the
-    diff-proportional add frames and broadcast-size tombstone key frames
-    per stage, plus a ``_delta.json`` log pointing at the base key —
-    the plain-parquet analogue of an Iceberg append/delete commit, so a
-    daily diff's refresh cost scales with the DIFF, not the corpus
-    (round-4 verdict missing #2). ``file_manifest`` is always written
-    fully (it is metadata-sized: one (path, sha) row per file). A stage
-    whose base is NOT resolvable at ``base_key_dir`` (e.g. call_edges
-    when the base graph was re-resolved in memory) is written fully
-    once, making later hops delta-capable. Readers go through
-    :func:`load_probe_stages`; the log is written last, so a crash
-    mid-refresh is invisible (no log → key not probe-eligible).
-    Chains compact every ``max_chain`` hops (default
-    ``PROBE_MAX_CHAIN``): the merged frames are written fully and the
-    depth resets, bounding read-plan size.
+    A stage with a delta in ``out["artifact_deltas"]`` is written as its
+    diff-proportional add frame and broadcast-size tombstone key frames;
+    :func:`load_probe_stages` replays them over the base with
+    :func:`apply_delta`, the rule the probe built the merged stage with.
+    A stage is written fully instead when it has no delta
+    (``file_manifest``: metadata-sized, one (path, sha) row per file) or
+    when its base does not resolve at ``base_key_dir`` (e.g. call_edges
+    after the probe re-resolved the base graph in memory), which makes
+    later hops delta-capable. The ``_delta.json`` log pointing at the
+    base key is written last: it is the commit point, so a crash
+    mid-refresh leaves a key that is not probe-eligible.
 
-    **Full rewrite** (legacy signature, or at compaction depth): write
-    each merged stage frame as plain parquet. Unchanged rows stream from
-    the base checkpoint scan, changed rows from the diff-proportional
-    compute — a narrow columnar copy + the diff, no recompute — but the
-    I/O is corpus-proportional, which is exactly what the delta layout
-    avoids between compactions.
+    Past ``PROBE_MAX_CHAIN`` chained commits the hop compacts: every
+    stage is written fully and no log is written, so the depth resets
+    and read plans stay bounded.
 
     Returns the stage names committed."""
-    deltas = out.get("artifact_deltas")
-    max_chain = PROBE_MAX_CHAIN if max_chain is None else max_chain
-    depth = 0
-    if spark is not None and base_key_dir is not None and deltas:
-        base_log = _read_delta_log(spark, base_key_dir)
-        depth = (base_log.get("depth", 0) + 1) if base_log else 1
-    delta_mode = (
-        spark is not None
-        and base_key_dir is not None
-        and bool(deltas)
-        and depth <= max_chain
-    )
-    if not delta_mode:
-        written = []
-        for stage in PROBE_ARTIFACT_STAGES:
-            df = out.get(stage)
-            if df is None:
-                continue
-            df.write.mode("overwrite").parquet(f"{key_dir}/{stage}")
-            written.append(stage)
-        if spark is not None:
-            # a compaction rewrite at a key that previously carried a
-            # delta commit must drop the log: full stages shadow delta
-            # entries at read time anyway, but a stale log would feed a
-            # wrong depth into the NEXT hop's compaction decision
-            fs_delete(spark, f"{key_dir}/{PROBE_DELTA_LOG}")
-        return written
-
-    # never leave a stale log next to fresh stage data: remove any prior
-    # commit at this key before writing (the log is re-written last)
+    base_log = _read_delta_log(spark, base_key_dir)
+    depth = (base_log.get("depth", 0) + 1) if base_log else 1
+    deltas = {} if depth > PROBE_MAX_CHAIN else out.get("artifact_deltas") or {}
+    # remove any earlier commit's log first: full stages shadow delta
+    # entries at read time, but a stale log would feed a wrong depth into
+    # the next hop's compaction decision
     fs_delete(spark, f"{key_dir}/{PROBE_DELTA_LOG}")
     written = []
     log_stages: dict[str, dict] = {}
@@ -225,30 +207,23 @@ def persist_probe_artifacts(
         df = out.get(stage)
         if df is None:
             continue
-        delta = deltas.get(stage)
-        if (
-            stage == "file_manifest"
-            or delta is None
-            or _probe_stage_chain(spark, base_key_dir, stage) is None
-        ):
-            df.write.mode("overwrite").parquet(f"{key_dir}/{stage}")
-        else:
-            delta["add"].write.mode("overwrite").parquet(
-                f"{key_dir}/{stage}_delta/add"
-            )
-            tomb_dirs = []
-            for i, tomb in enumerate(delta["tombs"]):
-                tomb_dirs.append(f"{stage}_delta/tomb{i}")
-                tomb.dropDuplicates().write.mode("overwrite").parquet(
-                    f"{key_dir}/{stage}_delta/tomb{i}"
-                )
-            log_stages[stage] = {"add": f"{stage}_delta/add", "tombs": tomb_dirs}
         written.append(stage)
-    fs_write_text(
-        spark,
-        f"{key_dir}/{PROBE_DELTA_LOG}",
-        json.dumps({"base": base_key_dir, "depth": depth, "stages": log_stages}),
-    )
+        delta = deltas.get(stage)
+        if delta is None or _probe_stage_chain(spark, base_key_dir, stage) is None:
+            df.write.mode("overwrite").parquet(f"{key_dir}/{stage}")
+            continue
+        delta_dir = f"{stage}_delta"
+        delta["add"].write.mode("overwrite").parquet(f"{key_dir}/{delta_dir}/add")
+        tomb_dirs = [f"{delta_dir}/tomb{i}" for i in range(len(delta["tombs"]))]
+        for tomb, tomb_dir in zip(delta["tombs"], tomb_dirs):
+            tomb.dropDuplicates().write.mode("overwrite").parquet(f"{key_dir}/{tomb_dir}")
+        log_stages[stage] = {"add": f"{delta_dir}/add", "tombs": tomb_dirs}
+    if log_stages:
+        fs_write_text(
+            spark,
+            f"{key_dir}/{PROBE_DELTA_LOG}",
+            json.dumps({"base": base_key_dir, "depth": depth, "stages": log_stages}),
+        )
     return written
 
 
@@ -340,6 +315,20 @@ def incremental_scan_probe(
     rolling diffs) and ``exp_affected_origins`` (the re-expanded origin
     set — the work counter probe tests assert stays ≪ total origins).
 
+    Every merged artifact stage is built by one rule, the one the
+    rolling-base refresh commits and the chain reader replays:
+    ``apply_delta(base, **artifact_deltas[stage])``, with a
+    diff-proportional add frame and these tombstones:
+
+      - ``snippets``: the gone (changed or deleted) paths, plus in EXP
+        mode ``(kind='EXP', unit_id)`` of the affected origins;
+      - ``signatures``: the affected token-set groups (a rep at a gone
+        path is in one, since its group lost that member);
+      - ``call_facts``: the gone paths;
+      - ``call_edges``: ``caller_path`` in the re-resolved or gone paths.
+
+    To change how a merged stage is built, change its delta.
+
     Every stage is an eager local checkpoint, as in an in-memory
     :func:`~sparkclone.pipeline.run_pipeline`. ``release`` frees them all,
     with the operators' persists; read no returned frame after it (a read
@@ -411,16 +400,19 @@ def incremental_scan_probe(
     new_paths = corpus_new.select(F.concat_ws("/", "repo", "path").alias("fpath"))
     old_paths = corpus_old.select(F.concat_ws("/", "repo", "path").alias("fpath"))
     # paths whose snippets leave the corpus state: changed (replaced) or
-    # deleted (present in old only). Not de-duplicated here, nor is
-    # `affected` below: both only ever feed semi/anti joins, where a
-    # repeated key changes nothing, and the refresh de-duplicates each
-    # tombstone it writes — a shuffle here would be a job for nothing.
-    gone_fp = cut(
+    # deleted (present in old only) — the path tombstone of snippets and
+    # call_facts. Not de-duplicated here, nor is `affected` below: both
+    # only ever feed semi/anti joins, where a repeated key changes
+    # nothing, and the refresh de-duplicates each tombstone it writes — a
+    # shuffle here would be a job for nothing.
+    gone_paths = cut(
         "gone_paths",
         old_paths.join(new_paths, "fpath", "left_anti")
         .unionByName(changed.select("fpath"))
-        .select(F.col("fpath").alias("__gonefp")),
+        .select(F.col("fpath").alias("path")),
     )
+    # each merged stage's delta vs its base stage (see the docstring)
+    deltas: dict[str, dict] = {}
 
     # 1. extract ONLY changed files; everything else stays parquet-side.
     # The explicit repartition spreads the Python extraction even when the
@@ -433,6 +425,8 @@ def incremental_scan_probe(
     new_snips = cut("new_snippets", tokenize_snippets(
         extract_snippets(changed_corpus, cfg.windows, normalize=cfg.normalize_text), cfg
     ))
+    snip_add = new_snips
+    snip_tombs = [gone_paths]
 
     # 1b. EXP: re-extract call facts for changed files only, re-resolve
     # edges only for callers the diff can affect, re-expand only affected
@@ -440,14 +434,7 @@ def incremental_scan_probe(
     # verbatim, so only genuinely changed expansions surface in the
     # symmetric diff below (and only those mark groups affected / miss
     # the sig cache).
-    base_exp = base_snippets.where(F.col("kind") == "EXP")
-    base_nonexp = base_snippets.where(F.col("kind") != "EXP")
     exp_extra_affected = None
-    exp_all = None
-    exp_new = None
-    new_facts = None
-    new_edges_sub = None
-    drop_fp = None
     facts = None
     call_graph = None
     affected_origins = None
@@ -465,11 +452,9 @@ def incremental_scan_probe(
             # graph once (corpus-proportional — the only non-diff-
             # proportional step, and only on this fallback path)
             base_edges = cut("base_call_edges", call_edges(base_facts))
-        kept_facts = base_facts.join(
-            F.broadcast(gone_fp), base_facts["path"] == F.col("__gonefp"), "left_anti"
-        )
         new_facts = cut("new_call_facts", file_facts(changed_corpus))
-        facts = cut("call_facts", kept_facts.unionByName(new_facts))
+        deltas["call_facts"] = {"add": new_facts, "tombs": [gone_paths]}
+        facts = cut("call_facts", apply_delta(base_facts, **deltas["call_facts"]))
 
         # (a) importers whose resolution can shift: any import whose exact
         # candidate paths or repo-scoped suffix keys match an added /
@@ -522,9 +507,12 @@ def incremental_scan_probe(
             .unionByName(affected_importers.select(F.col("path").alias("fpath")))
             .dropDuplicates(),
         )
-        drop_fp = cut(
+        # callers whose base edges leave the graph: re-resolved or gone —
+        # the call_edges tombstone
+        drop_callers = cut(
             "drop_paths",
-            recompute_fp.unionByName(gone_fp.select(F.col("__gonefp").alias("fpath")))
+            recompute_fp.select(F.col("fpath").alias("caller_path"))
+            .unionByName(gone_paths.select(F.col("path").alias("caller_path")))
             .dropDuplicates(),
         )
 
@@ -535,21 +523,15 @@ def incremental_scan_probe(
         new_edges_sub = cut(
             "new_call_edges", call_edges(facts, caller_paths=recompute_fp)
         )
-        kept_edges = base_edges.join(
-            F.broadcast(drop_fp.select(F.col("fpath").alias("__dropfp"))),
-            base_edges["caller_path"] == F.col("__dropfp"),
-            "left_anti",
-        )
-        call_graph = kept_edges.unionByName(new_edges_sub)
+        deltas["call_edges"] = {"add": new_edges_sub, "tombs": [drop_callers]}
+        call_graph = apply_delta(base_edges, **deltas["call_edges"])
 
         # (c) affected origins: callers of any removed/re-resolved/added
         # edge, plus every unit in a changed file, closed under reverse
         # BFS depth-1 hops — exactly the origins whose ≤depth reach can
         # cross the change set.
         removed_callers = base_edges.join(
-            F.broadcast(drop_fp.select(F.col("fpath").alias("__dropfp"))),
-            base_edges["caller_path"] == F.col("__dropfp"),
-            "left_semi",
+            F.broadcast(drop_callers), "caller_path", "left_semi"
         ).select(F.col("caller_uid").alias("origin_uid"))
         seed = cut(
             "exp_seed_origins",
@@ -581,39 +563,30 @@ def incremental_scan_probe(
 
         # (d) re-expand ONLY the affected origins over the merged graph;
         # unaffected origins keep their base EXP rows (byte-identical by
-        # snippet_id determinism)
+        # snippet_id determinism): the snippets delta drops the affected
+        # origins' base EXP rows and adds their re-expansion
         exp_new = cut("exp_snippets", tokenize_snippets(
             expand_from_facts(
                 facts, cfg.expansion, edges=call_graph, origins=affected_origins
             ),
             cfg,
         ))
-        kept_exp = base_exp.join(
-            F.broadcast(gone_fp), base_exp["path"] == F.col("__gonefp"), "left_anti"
-        ).join(
-            F.broadcast(affected_origins.select(F.col("origin_uid").alias("unit_id"))),
-            "unit_id",
-            "left_anti",
-        )
-        exp_all = kept_exp.unionByName(exp_new)
+        affected_units = affected_origins.select(F.col("origin_uid").alias("unit_id"))
+        snip_add = new_snips.unionByName(exp_new)
+        snip_tombs.append(affected_units.select(F.lit("EXP").alias("kind"), "unit_id"))
 
         # (e) EXP rows entering/leaving the corpus state mark their
         # token-set groups affected. Only dropped CANDIDATES (gone-path
         # or affected-origin base rows — a diff-proportional set) can
         # leave, so the anti-joins never shuffle the full corpus.
+        base_exp = base_snippets.where(F.col("kind") == "EXP")
         exp_new_only = exp_new.join(
             base_exp.select("snippet_id"), "snippet_id", "left_anti"
         )
         dropped_candidates = base_exp.join(
-            F.broadcast(gone_fp), base_exp["path"] == F.col("__gonefp"), "left_semi"
+            F.broadcast(gone_paths), "path", "left_semi"
         ).unionByName(
-            base_exp.join(
-                F.broadcast(
-                    affected_origins.select(F.col("origin_uid").alias("unit_id"))
-                ),
-                "unit_id",
-                "left_semi",
-            )
+            base_exp.join(F.broadcast(affected_units), "unit_id", "left_semi")
         )
         exp_gone = dropped_candidates.join(
             exp_new.select("snippet_id"), "snippet_id", "left_anti"
@@ -632,29 +605,19 @@ def incremental_scan_probe(
     # signing then run over affected groups only: every stage below
     # scales with the diff, not the corpus.
     affected = new_snips.select("tokenset_hash").unionByName(
-        base_snippets.join(
-            F.broadcast(gone_fp), base_snippets["path"] == F.col("__gonefp"), "left_semi"
-        ).select("tokenset_hash")
+        base_snippets.join(F.broadcast(gone_paths), "path", "left_semi")
+        .select("tokenset_hash")
     )
     if exp_extra_affected is not None:
         affected = affected.unionByName(exp_extra_affected)
     affected = cut("affected_groups", affected)
-    if exp_all is not None:
-        # base EXP rows: kept verbatim for unaffected origins, replaced
-        # by the re-expanded subset otherwise (both inside exp_all)
-        kept_base = base_nonexp.join(
-            F.broadcast(gone_fp), base_nonexp["path"] == F.col("__gonefp"), "left_anti"
-        )
-        all_snips = kept_base.unionByName(new_snips).unionByName(exp_all)
-    else:
-        kept_base = base_snippets.join(
-            F.broadcast(gone_fp), base_snippets["path"] == F.col("__gonefp"), "left_anti"
-        )
-        all_snips = kept_base.unionByName(new_snips)
+    deltas["snippets"] = {"add": snip_add, "tombs": snip_tombs}
     # like the merged signatures below, the merged snippets keep the base
     # read's partition count: they are the stream side of the LCS text
     # joins, so their count is the number of Python LCS tasks
-    all_snips = all_snips.coalesce(base_snippets.rdd.getNumPartitions())
+    all_snips = apply_delta(base_snippets, **deltas["snippets"]).coalesce(
+        base_snippets.rdd.getNumPartitions()
+    )
     # rebalance: the semi-join keeps the corpus side's partitioning — one
     # near-empty partition per base and add file — and every one of them
     # would be a task in each collapse and signing stage downstream; AQE
@@ -678,22 +641,20 @@ def incremental_scan_probe(
     misses = reps_sub.drop("norm_text", "text_hash").join(
         F.broadcast(cached_sub.select("snippet_id")), "snippet_id", "left_anti"
     )
-    # a base rep at a changed or deleted path is in an affected group (its
-    # group lost that member), so the anti-join also drops every such rep
-    keep_base_sigs = base_signatures.join(
-        F.broadcast(affected), "tokenset_hash", "left_anti"
-    )
     # sig_new = the rows that DIFFER from the base signatures stage (the
-    # affected groups' reps: cache hits re-admitted + fresh misses) — cut
-    # separately because it is also the signatures DELTA the rolling-base
-    # refresh persists (persist_probe_artifacts). The merged stage keeps
-    # the base read's partition count, so it does not grow hop by hop.
+    # affected groups' reps: cache hits re-admitted + fresh misses), cut
+    # on its own because it is also the committed add frame. The
+    # tombstone is the affected groups: a base rep at a changed or deleted
+    # path is in an affected group (its group lost that member), so it
+    # also drops every such rep. The merged stage keeps the base read's
+    # partition count, so it does not grow hop by hop.
     sig_new = cut("new_signatures", cached_sub.unionByName(
         with_signatures(misses, cfg.signature)
     ))
+    deltas["signatures"] = {"add": sig_new, "tombs": [affected]}
     signatures = cut(
         "signatures",
-        keep_base_sigs.unionByName(sig_new).coalesce(
+        apply_delta(base_signatures, **deltas["signatures"]).coalesce(
             base_signatures.rdd.getNumPartitions()
         ),
     )
@@ -728,49 +689,6 @@ def incremental_scan_probe(
     findings = cut("findings", rollup_findings(pair_edges, cfg.thresholds))
     diff_findings = diff_filter_findings(findings, changed)
 
-    # Deltas vs the BASE artifact stages — everything the rolling-base
-    # refresh needs to commit this hop as add-files + delete-predicates
-    # instead of rewriting the corpus-proportional merged frames (the
-    # plain-parquet analogue of an Iceberg append/delete commit; see
-    # persist_probe_artifacts). Each "add" frame is diff-proportional and
-    # already cut; each tombstone is a broadcast-size key
-    # frame whose COLUMNS are the anti-join keys, so the reader applies
-    # them generically: stage = base ∖ tomb0 ∖ tomb1 … ∪ add.
-    # Reconstruction identities (proof sketches in the stage comments
-    # above):
-    #   snippets   = base  ∖ (path ∈ gone paths)
-    #                      ∖ ((kind, unit_id) ∈ 'EXP' × affected origins) ∪ add
-    #   signatures = base  ∖ (tokenset_hash ∈ affected groups)           ∪ add
-    #     (rows at gone paths are always inside affected token-set
-    #      groups — a rep at a changed/deleted path lost that member —
-    #      so the tokenset tombstone subsumes the path predicate)
-    #   call_facts = base  ∖ (path ∈ gone paths)                         ∪ add
-    #   call_edges = base  ∖ (caller_path ∈ recompute ∪ gone paths)      ∪ add
-    tomb_paths = gone_fp.select(F.col("__gonefp").alias("path"))
-    snip_tombs = [tomb_paths]
-    snip_add = new_snips
-    if exp_new is not None:
-        snip_add = new_snips.unionByName(exp_new)
-        snip_tombs.append(
-            affected_origins.select(
-                F.lit("EXP").alias("kind"), F.col("origin_uid").alias("unit_id")
-            )
-        )
-    artifact_deltas: dict = {
-        "snippets": {"add": snip_add, "tombs": snip_tombs},
-        "signatures": {
-            "add": sig_new,
-            "tombs": [affected.select("tokenset_hash")],
-        },
-    }
-    if new_facts is not None:
-        artifact_deltas["call_facts"] = {"add": new_facts, "tombs": [tomb_paths]}
-    if new_edges_sub is not None:
-        artifact_deltas["call_edges"] = {
-            "add": new_edges_sub,
-            "tombs": [drop_fp.select(F.col("fpath").alias("caller_path"))],
-        }
-
     return {
         "changed_files": changed,
         "snippets": all_snips,
@@ -791,6 +709,6 @@ def incremental_scan_probe(
         "file_manifest": corpus_new.select(
             F.concat_ws("/", "repo", "path").alias("path"), "content_sha256"
         ),
-        "artifact_deltas": artifact_deltas,
+        "artifact_deltas": deltas,
         "release": ck.release,
     }

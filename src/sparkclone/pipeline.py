@@ -341,7 +341,7 @@ def run_pipeline(
         # an otherwise-identical function at identical lines — accepted,
         # unit identity still differs via unit_id only in that row's
         # display fields, never in match topology at realistic odds.
-        prior = ck.find_prior_stage("signatures")
+        prior = (ck.find_prior_stages(["signatures"]) or {}).get("signatures")
         fresh_cols = [c for c in todo.columns if c != "norm_text"] + [
             "minhash", "simhash", "bands"
         ]

@@ -4,6 +4,9 @@ changed set (judge round-1 item 6; north rule probe-side reserve)."""
 
 from __future__ import annotations
 
+import json
+import os
+
 import pytest
 from hypothesis import example, given, settings
 from hypothesis import strategies as st
@@ -244,6 +247,33 @@ def test_probe_expansion_work_is_diff_proportional(spark, tmp_path):
     fresh["metrics"].release()
 
 
+def _assert_exp_commit_replays_probe(spark, base, probe, ck):
+    """Commit an EXP probe hop as a delta over the base run's checkpoint
+    key and resolve it back through load_probe_stages: every merged stage
+    must be row-identical to the probe's frame, in the base stage's
+    column order. This reaches the EXP tombstones at row level: the
+    ``(kind, unit_id)`` of the affected origins' base EXP snippets and
+    the ``caller_path`` of re-resolved or gone callers' edges."""
+    from sparkclone.incremental import load_probe_stages, persist_probe_artifacts
+
+    stages = ["snippets", "signatures", "call_facts", "call_edges"]
+    key = f"{ck}/exp-hop"
+    persist_probe_artifacts(
+        probe, key, spark=spark, base_key_dir=f"{ck}/{base['metrics'].config_hash}"
+    )
+    with open(os.path.join(key, "_delta.json")) as fh:
+        committed = json.load(fh)["stages"]
+    assert set(stages) <= set(committed)
+    assert len(committed["snippets"]["tombs"]) == 2
+    loaded = load_probe_stages(spark, key, stages)
+    for stage in stages:
+        got, want = loaded[stage], probe[stage]
+        assert got.columns == want.columns == base[stage].columns, stage
+        assert got.exceptAll(want).isEmpty(), f"{stage}: extra rows after replay"
+        assert want.exceptAll(got).isEmpty(), f"{stage}: rows lost in replay"
+        got.unpersist()
+
+
 def test_probe_expansion_propagates_shared_helper_change(spark, tmp_path):
     """The dangerous case for partial re-expansion: a change to a shared
     depth-2 helper (core.py) must invalidate EVERY origin that reaches it
@@ -264,6 +294,7 @@ def test_probe_expansion_propagates_shared_helper_change(spark, tmp_path):
     # every helper_i (depth-1) and caller_i (depth-2 via reverse BFS)
     # must re-expand
     assert probe["exp_affected_origins"].count() >= 24
+    _assert_exp_commit_replays_probe(spark, base, probe, str(tmp_path / "ck"))
     fresh = run_pipeline(spark, corpus_new, cfg)
     assert _exp_snippet_ids(probe["snippets"]) == _exp_snippet_ids(fresh["snippets"])
     fresh["metrics"].release()

@@ -8,8 +8,8 @@ Launched via spark-submit --py-files (see tools/run_scaling.sh):
 Runs the full pipeline on the given corpus, measures wall time and
 per-stage breakdown, and appends one JSON line to <out.json>. The
 ``stages`` field holds per-stage walls only when a checkpoint root is
-given: with ``-`` (what run_scaling.sh passes) stages persist lazily
-in memory, record no metrics rows, and ``stages`` is empty. The
+given: with ``-`` (what run_scaling.sh passes) each stage is an eager
+local checkpoint that records no metrics row, and ``stages`` is empty. The
 companion shell script runs N=8 and 4N=32 on the identical input and
 computes scaling efficiency (T_8 / T_32) / 4.
 """
