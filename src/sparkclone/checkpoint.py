@@ -155,7 +155,7 @@ class CheckpointManager:
     root: str | None = None
     metrics: list[StageMetrics] = field(default_factory=list)
     # DataFrames persisted during the run by operators (e.g. the LSH
-    # bucket-size aggregate), and the in-memory stage checkpoints (cuts).
+    # routed band rows), and the in-memory stage checkpoints (cuts).
     # ``release()`` frees both once the caller is done with the outputs —
     # without it, a long-lived session running many pipelines accumulates
     # dead blocks in storage memory.
@@ -275,10 +275,11 @@ class CheckpointManager:
         run returned reads a stage checkpoint, so a read after this fails
         with ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND`` instead of recomputing.
         Parquet stages are not touched, and neither are the local
-        checkpoints operators take inside a stage (the distributed
-        connected-components loop, the expansion BFS): once the stage is
-        cut they are unreachable, and their blocks stay pinned until
-        Spark's context cleaner drops them after a driver GC."""
+        checkpoints that only two operators take inside a stage: the
+        distributed connected-components loop and the expansion BFS past
+        depth 1. Once the stage is cut they are unreachable, and their
+        blocks stay pinned until Spark's context cleaner drops them after
+        a driver GC."""
         for df in self.aux:
             try:
                 df.unpersist()

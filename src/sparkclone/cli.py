@@ -259,26 +259,16 @@ def main(argv: list[str] | None = None) -> int:
 
             key_dir = f"{args.base_artifacts}/{cfg.config_hash()}-{snapshot_key(base)}"
             needed = ["snippets", "signatures"]
-            # EXP probe also needs the call facts — same condition under
-            # which run_pipeline writes them (enabled AND depth > 0; an
+            # the EXP probe also needs the call graph, under the condition
+            # on which run_pipeline writes it (enabled AND depth > 0: an
             # enabled+depth==0 config generates no EXP snippets and must
-            # not be forced into a full rescan for a stage that never
-            # exists). call_edges is OPTIONAL: the probe re-resolves the
-            # base graph from call_facts when it's absent (older artifact
-            # roots predate the call_edges stage), so its absence must
-            # only cost the one documented corpus-proportional re-resolve,
-            # never a full rescan. load_probe_stages transparently
-            # resolves delta-commit chains written by earlier probe hops.
+            # not be forced into a full rescan for stages that never
+            # exist). load_probe_stages transparently resolves
+            # delta-commit chains written by earlier probe hops.
             if cfg.expansion.enabled and cfg.expansion.depth > 0:
-                needed += ["call_facts"]
+                needed += ["call_facts", "call_edges"]
             base_stages = load_probe_stages(spark, key_dir, needed)
-            if base_stages is not None:
-                base_stages.update(
-                    load_probe_stages(
-                        spark, key_dir, ["call_edges"], required=False
-                    )
-                )
-            else:
+            if base_stages is None:
                 print(
                     f"base artifacts incomplete under {key_dir}; "
                     "falling back to full rescan",

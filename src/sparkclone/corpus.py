@@ -21,7 +21,6 @@ reference CloneHunter can run on it as the recall oracle
 
 from __future__ import annotations
 
-import hashlib
 import random
 from dataclasses import dataclass
 from pathlib import Path
@@ -199,7 +198,3 @@ def render_to_dir(rows: list[CorpusRow], root: str) -> str:
         p.parent.mkdir(parents=True, exist_ok=True)
         p.write_text(r.content, encoding="utf-8")
     return root
-
-
-def expected_sha256(content: str) -> str:
-    return hashlib.sha256(content.encode("utf-8")).hexdigest()

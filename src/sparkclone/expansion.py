@@ -633,13 +633,13 @@ def expand_snippets(corpus: DataFrame, exp: ExpansionConfig, windows: WindowConf
     # the tree to the point where Catalyst's own plan rendering OOMs.
     # Truncating lineage here keeps the plan linear in branch count.
     facts = file_facts(corpus).localCheckpoint(eager=True)
-    return expand_from_facts(facts, exp)
+    return expand_from_facts(facts, exp, edges=call_edges(facts))
 
 
 def expand_from_facts(
     facts: DataFrame,
     exp: ExpansionConfig,
-    edges: DataFrame | None = None,
+    edges: DataFrame,
     origins: DataFrame | None = None,
 ) -> DataFrame:
     """EXP snippet rows from a (lineage-truncated) FACTS table.
@@ -650,20 +650,20 @@ def expand_from_facts(
     extracted facts for changed files — instead of re-running the Python
     AST kernel over the whole corpus.
 
-    ``edges`` supplies a precomputed call graph (the ``call_edges``
-    checkpoint stage, or the probe path's incrementally merged edge set)
-    so the resolution joins don't re-run; ``origins`` (one ``origin_uid``
-    column) restricts expansion to that origin subset — together they
-    make probe-mode EXP diff-proportional end-to-end (round-3 verdict
-    missing #2): the reference's frontier loop re-expands every origin
-    each run (snippets/expansion.py:115-143); here only origins whose
-    ≤-depth call-graph reach intersects the change set re-expand.
+    ``edges`` is the resolved call graph of ``facts`` (the ``call_edges``
+    stage, or the probe path's incrementally merged edge set);
+    ``origins`` (one ``origin_uid`` column) restricts expansion to that
+    origin subset — together they make probe-mode EXP diff-proportional
+    end-to-end (round-3 verdict missing #2): the reference's frontier
+    loop re-expands every origin each run (snippets/expansion.py:115-143);
+    here only origins whose ≤-depth call-graph reach intersects the
+    change set re-expand.
 
     ``facts`` must already be lineage-truncated (localCheckpoint) — it
-    fans out to ~8 join branches."""
+    fans out to ~8 join branches. The result is not cut here: each
+    caller cuts it (the ``snippets`` stage, the probe's ``exp_snippets``
+    cut)."""
     units = _units_flat(facts)
-    if edges is None:
-        edges = call_edges(facts)
     reach = _bfs_reach(edges, exp.depth, origins=origins)
 
     helper_payload = units.select(
@@ -740,7 +740,4 @@ def expand_from_facts(
                 )
             yield pd.DataFrame(rows, columns=out_names)
 
-    # EXP rows are few and small; cutting lineage again keeps the
-    # snippets-stage plan (extract UNION exp -> tokenize -> collapse ->
-    # ...) from re-embedding the whole resolution DAG per consumer.
-    return assembled.mapInPandas(finish, schema=SNIPPET_SCHEMA).localCheckpoint(eager=True)
+    return assembled.mapInPandas(finish, schema=SNIPPET_SCHEMA)

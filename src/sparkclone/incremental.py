@@ -141,12 +141,11 @@ def _read_probe_chain(spark, stage: str, chain: list) -> DataFrame:
 
 
 def load_probe_stages(
-    spark, key_dir: str, stages: list[str], required: bool = True
+    spark, key_dir: str, stages: list[str]
 ) -> dict[str, "DataFrame"] | None:
     """Load probe artifact stages from ``key_dir``, transparently
     resolving delta-commit chains (see :func:`persist_probe_artifacts`).
-    With ``required``, returns None if ANY stage is unavailable;
-    otherwise returns whichever resolve (possibly {}).
+    Returns None if ANY stage is unavailable.
 
     A stage that resolved THROUGH a delta chain comes back in no more
     partitions than its root parquet read, and is persist()ed (lazy,
@@ -161,9 +160,7 @@ def load_probe_stages(
     for stage in stages:
         chain = _probe_stage_chain(spark, key_dir, stage)
         if chain is None:
-            if required:
-                return None
-            continue
+            return None
         df = _read_probe_chain(spark, stage, chain)
         out[stage] = df.persist() if len(chain) > 1 else df
     return out
@@ -183,9 +180,9 @@ def persist_probe_artifacts(
     :func:`apply_delta`, the rule the probe built the merged stage with.
     A stage is written fully instead when it has no delta
     (``file_manifest``: metadata-sized, one (path, sha) row per file) or
-    when its base does not resolve at ``base_key_dir`` (e.g. call_edges
-    after the probe re-resolved the base graph in memory), which makes
-    later hops delta-capable. The ``_delta.json`` log pointing at the
+    when its base does not resolve at ``base_key_dir`` (the probe read it
+    from elsewhere), so a delta is only ever committed over a base the
+    next hop can replay it on. The ``_delta.json`` log pointing at the
     base key is written last: it is the commit point, so a crash
     mid-refresh leaves a key that is not probe-eligible.
 
@@ -285,11 +282,11 @@ def incremental_scan_probe(
     representative, star edges, and signature remain valid and are kept
     via broadcast anti-joins — the full corpus is never shuffled.
 
-    EXP snippets (``cfg.expansion.enabled``): supported when the base
-    run's ``call_facts`` checkpoint is supplied as ``base_facts`` (and,
-    for the fully diff-proportional path, its ``call_edges`` checkpoint
-    as ``base_edges`` — without it the base graph is re-resolved once,
-    corpus-proportionally). Every EXP stage then scales with the diff:
+    EXP snippets (``cfg.expansion.enabled``): the base run's
+    ``call_facts`` and ``call_edges`` stages are required, as
+    ``base_facts`` and ``base_edges`` (``run_pipeline`` writes both inside
+    its ``snippets`` stage, and every EXP refresh commits both). Every EXP
+    stage then scales with the diff:
 
       - fact extraction (the per-file Python AST kernel) runs only over
         changed files; unchanged files' facts merge in from the base;
@@ -345,10 +342,13 @@ def incremental_scan_probe(
 
     ensure_shipped(spark)
     cfg = cfg or PipelineConfig()
-    if cfg.expansion.enabled and cfg.expansion.depth > 0 and base_facts is None:
+    if cfg.expansion.enabled and cfg.expansion.depth > 0 and (
+        base_facts is None or base_edges is None
+    ):
         raise ValueError(
             "probe-side incremental scan with EXP expansion needs the base "
-            "run's call_facts checkpoint (pass base_facts)"
+            "run's call_facts and call_edges checkpoints (pass base_facts "
+            "and base_edges)"
         )
     # Base-consistency guard (round-4 verdict missing #3): the probe
     # TRUSTS that base_snippets/base_signatures were computed from
@@ -447,11 +447,6 @@ def incremental_scan_probe(
             file_facts,
         )
 
-        if base_edges is None:
-            # no call_edges checkpoint supplied: re-resolve the BASE
-            # graph once (corpus-proportional — the only non-diff-
-            # proportional step, and only on this fallback path)
-            base_edges = cut("base_call_edges", call_edges(base_facts))
         new_facts = cut("new_call_facts", file_facts(changed_corpus))
         deltas["call_facts"] = {"add": new_facts, "tombs": [gone_paths]}
         facts = cut("call_facts", apply_delta(base_facts, **deltas["call_facts"]))

@@ -203,34 +203,25 @@ def probe_candidate_pairs(
 
 
 def candidate_pairs(
-    sigs: DataFrame,
-    cfg: LshConfig,
-    id_col: str = "snippet_id",
-    aux_registry: list | None = None,
+    sigs: DataFrame, cfg: LshConfig, aux_registry: list | None = None
 ) -> tuple[DataFrame, DataFrame]:
     """Candidate (id_a < id_b) pairs from LSH band buckets.
 
     Returns (pairs, bucket_stats) where bucket_stats carries one row per
-    routing class (plain / salted / dropped) with bucket + member counts —
-    fed to the `_metrics` sink so silently-dropped hot buckets are visible.
+    routing class (plain / salted / dropped) with bucket + member counts,
+    so a caller can see how many members the size cap dropped. It is a
+    lazy frame: the bucket sizes are counted again only if it is read.
 
     ``aux_registry``: persisted helper frames are appended here so the
-    caller can unpersist them once pairs/bucket_stats are materialized
+    caller can unpersist them once the pairs are materialized
     (run_pipeline wires CheckpointManager.aux; see its release()).
     """
-    bt = band_table(sigs, id_col)
-    # sizes is consumed twice (routing join + bucket_stats) and is tiny
-    # (one row per non-singleton bucket): persist so materializing pairs
-    # also materializes it and the stats aggregation is a cache scan, not
-    # a second band-table explode.
+    bt = band_table(sigs)
     sizes = (
         bt.groupBy("band_id", "band_hash")
         .agg(F.count("*").alias("bsize"))
         .where(F.col("bsize") >= 2)
-        .persist()
     )
-    if aux_registry is not None:
-        aux_registry.append(sizes)
     cap = cfg.max_bucket_size if cfg.max_bucket_size > 0 else (1 << 62)
     # routed is persisted: the pair generation reads it FOUR times (both
     # sides of the plain self-join + both sides of the salted join), and

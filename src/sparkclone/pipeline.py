@@ -96,13 +96,6 @@ def collapse_exact(
       lcs_chars is text length when the raw texts are also identical,
       null otherwise (char-level LCS undefined without the texts).
     """
-    keyed = tokenized
-    if "tokenset_hash" not in keyed.columns:
-        # tokenize_snippets normally precomputes this; recompute only for
-        # callers feeding raw token arrays
-        keyed = keyed.withColumn(
-            "tokenset_hash", F.xxhash64(F.concat_ws(" ", F.col("tokens")))
-        )
     # Rep assignment via one slim aggregation + slim join-back instead of
     # a window (guide §2.3 "shuffle fewer bytes" / §2.4 "remove shuffles
     # outright" / §8 "decide with small rows, move big rows once"). The
@@ -127,7 +120,7 @@ def collapse_exact(
         "unit_id", "path", "unit_start", "unit_end", "kind",
         "start_line", "end_line",
     ]
-    slim = keyed.select(
+    slim = tokenized.select(
         "tokenset_hash", "snippet_id", *side_cols, "text_hash",
         F.length("norm_text").alias("__text_len"),
     )
@@ -148,7 +141,7 @@ def collapse_exact(
     # key-join moves snippet_id first and checkpointed stage schemas must
     # stay byte-stable across rounds.
     rep_ids = rep_map.select(F.col("__rep.snippet_id").alias("snippet_id"))
-    reps = keyed.join(rep_ids, "snippet_id", "left_semi").select(*keyed.columns)
+    reps = tokenized.join(rep_ids, "snippet_id", "left_semi").select(*tokenized.columns)
 
     members = slim.join(rep_map, "tokenset_hash").where(
         F.col("snippet_id") != F.col("__rep.snippet_id")
@@ -355,19 +348,10 @@ def run_pipeline(
 
     signatures = ck.load_or_compute("signatures", _signatures)
 
-    # Single invocation of candidate_pairs feeds BOTH checkpointed stages:
-    # bucket_stats derives from the (persisted) bucket-size aggregate the
-    # pair routing itself uses, so the band table is computed once per run
-    # — and zero times on resume, when both stages load from parquet.
-    _cp: dict[str, tuple[DataFrame, DataFrame]] = {}
-
-    def _pairs_and_stats() -> tuple[DataFrame, DataFrame]:
-        if "r" not in _cp:
-            _cp["r"] = candidate_pairs(signatures, cfg.lsh, aux_registry=ck.aux)
-        return _cp["r"]
-
-    pairs = ck.load_or_compute("candidate_pairs", lambda: _pairs_and_stats()[0])
-    bucket_stats = ck.load_or_compute("bucket_stats", lambda: _pairs_and_stats()[1])
+    # the pairs are a stage; the routing counts are not: bucket_stats stays
+    # lazy over the signatures stage and runs only when a caller reads it
+    lazy_pairs, bucket_stats = candidate_pairs(signatures, cfg.lsh, aux_registry=ck.aux)
+    pairs = ck.load_or_compute("candidate_pairs", lambda: lazy_pairs)
 
     def _verified() -> DataFrame:
         v = verify_candidates(pairs, signatures, cfg)

@@ -59,11 +59,6 @@ def get(kind: str, name: str) -> Callable:
         ) from None
 
 
-def get_or(kind: str, name: str, default_name: str) -> Callable:
-    reg = _REGISTRY.get(kind, {})
-    return reg[name] if name in reg else get(kind, default_name)
-
-
 def available(kind: str) -> list[str]:
     return sorted(_REGISTRY.get(kind, {}))
 

@@ -222,24 +222,6 @@ def auto_n_planes(n_rows: int, target_bucket: int = 64) -> int:
     return max(3, int(math.log2(max(n_rows / float(target_bucket), 2.0))) + 1)
 
 
-def srp_bucket(vec: Column, planes: list[list[float]]) -> Column:
-    """Sign-random-projection bucket id as a pure column expression (one
-    aggregate(zip_with) dot per plane, planes inlined as literals).
-
-    Small-plane-count twin of :func:`_srp_buckets_udf` kept for
-    SQL-oracle-checkable single-table bucketing (the deterministic
-    8-dim-sign bucket in ``embedding_near_dup_pairs`` has the same shape);
-    ``srp_topk`` itself uses the batched UDF — literal inlining is
-    O(n_planes*dim) logical-plan nodes and must not be used at auto-scaled
-    plane counts."""
-    bucket = F.lit(0).cast("long")
-    for i, plane in enumerate(planes):
-        arr = F.array(*[F.lit(float(x)) for x in plane])
-        bit = (dot(vec, arr) > 0).cast("long")
-        bucket = bucket + bit * F.lit(1 << i)
-    return bucket
-
-
 def srp_topk(
     df: DataFrame,
     k: int = 3,

@@ -244,7 +244,7 @@ def _walk_automaton(automaton, b: str) -> int:
 def with_lcs_evidence(
     verified: DataFrame,
     cfg: PipelineConfig,
-    snippets: DataFrame | None = None,
+    snippets: DataFrame,
     aux_registry: list | None = None,
 ) -> DataFrame:
     """Append `lcs_chars` (longest common substring length over normalized
@@ -256,7 +256,7 @@ def with_lcs_evidence(
     with the number of near-verbatim pairs, not all verified pairs.
     """
     near = F.col("hamming") <= F.lit(cfg.signature.simhash_near_radius)
-    if not cfg.lcs_evidence or snippets is None:
+    if not cfg.lcs_evidence:
         return verified.withColumn("lcs_chars", F.lit(None).cast("int")).withColumn(
             "near_verbatim", near
         )

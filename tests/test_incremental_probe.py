@@ -62,19 +62,21 @@ def test_probe_incremental_matches_full_rescan(spark, tmp_path):
     )
 
 
-def test_probe_expansion_needs_base_facts(spark):
-    """EXP probe requires the base run's call_facts checkpoint; without it
-    the scan must refuse explicitly rather than silently miss
-    expansion-only findings."""
+@pytest.mark.parametrize("with_facts", [False, True], ids=["no_facts", "facts_without_edges"])
+def test_probe_expansion_needs_base_facts(spark, with_facts):
+    """EXP probe requires the base run's call_facts AND call_edges
+    checkpoints; without either the scan must refuse explicitly rather
+    than silently miss expansion-only findings."""
     from dataclasses import replace
-
-    import pytest
 
     from sparkclone.config import ExpansionConfig
 
     cfg = replace(benchmark_config(), expansion=ExpansionConfig(enabled=True))
+    facts = spark.range(1) if with_facts else None
     with pytest.raises(ValueError, match="call_facts"):
-        incremental_scan_probe(spark, None, None, None, None, cfg)
+        incremental_scan_probe(
+            spark, None, None, None, None, cfg, base_facts=facts, base_edges=None
+        )
 
 
 # Cross-file call scenario for EXP probe parity: two helper modules, one
@@ -148,7 +150,7 @@ def test_probe_expansion_parity_with_full_rescan(spark, tmp_path):
     full = incremental_scan(spark, corpus_new, corpus_old, cfg)
     probe = incremental_scan_probe(
         spark, corpus_new, base["snippets"], base["signatures"], corpus_old, cfg,
-        base_facts=base["call_facts"],
+        base_facts=base["call_facts"], base_edges=base["call_edges"],
     )
     assert probe["changed_files"].count() == 2
     full_pairs = _pairset(full["diff_findings"])

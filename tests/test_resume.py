@@ -33,7 +33,7 @@ def test_resume_after_partial_run(spark, corpus_parquet, tmp_path):
     assert all(m.rows >= 0 for m in out1["metrics"].metrics)
 
     # simulate a crash after 'signatures': wipe downstream stages
-    for stage in ["candidate_pairs", "bucket_stats", "verified", "findings", "clusters"]:
+    for stage in ["candidate_pairs", "verified", "findings", "clusters"]:
         for p in glob.glob(f"{ck}/*/{stage}"):
             shutil.rmtree(p)
         for p in glob.glob(f"{ck}/*/{stage}.metrics.json"):

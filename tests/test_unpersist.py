@@ -4,13 +4,20 @@ verdict "What's wrong" #4).
 
 An in-memory run's release() frees its stage checkpoints too, and so does
 an incremental probe's; on a config whose operators take no local
-checkpoints of their own, nothing the run created survives it. Elsewhere localCheckpoint()ed frames are
+checkpoints of their own (expansion at depth 1 takes none), nothing the
+run created survives it. Elsewhere localCheckpoint()ed frames are
 exempt by design — their cached blocks ARE the truncated lineage of
 frames the caller may still hold — so those assertions distinguish them
 via RDD.isLocallyCheckpointed().
 """
 
 from __future__ import annotations
+
+from dataclasses import replace
+
+import pytest
+
+from sparkclone.config import ExpansionConfig, benchmark_config
 
 
 def _cached_rdd_ids(spark) -> dict[int, bool]:
@@ -23,16 +30,42 @@ def _cached_rdd_ids(spark) -> dict[int, bool]:
     return out
 
 
-def test_run_pipeline_release_frees_all_caches(spark, corpus_parquet):
-    from sparkclone.config import benchmark_config
+@pytest.mark.parametrize(
+    "cfg",
+    [
+        benchmark_config(),
+        replace(benchmark_config(), expansion=ExpansionConfig(enabled=True, depth=1)),
+    ],
+    ids=["plain", "exp_depth1"],
+)
+def test_run_pipeline_release_frees_all_caches(spark, corpus_parquet, cfg):
+    from pyspark.sql import functions as F
+
     from sparkclone.pipeline import load_corpus, run_pipeline
 
+    corpus = load_corpus(spark, corpus_parquet)
+    if cfg.expansion.enabled:
+        # the synthetic corpus has no cross-function calls: add a caller
+        # module and its helpers so that expansion emits EXP rows
+        from test_incremental_probe import _EXP_FILES
+
+        exp_rows = [
+            ("org0/exprepo", p, "0" * 40, "python", c) for p, c in sorted(_EXP_FILES.items())
+        ]
+        corpus = corpus.unionByName(
+            spark.createDataFrame(
+                exp_rows, "repo string, path string, commit string, lang string, content string"
+            ).withColumn("content_sha256", F.sha2("content", 256))
+        )
+
     before = set(_cached_rdd_ids(spark))
-    out = run_pipeline(spark, load_corpus(spark, corpus_parquet), benchmark_config())
+    out = run_pipeline(spark, corpus, cfg)
     # consume the outputs fully (findings + clusters + stats)
     out["findings"].count()
     out["cluster_sizes"].count()
     out["bucket_stats"].count()
+    if cfg.expansion.enabled:
+        assert out["snippets"].where(F.col("kind") == "EXP").count() > 0
     # in-memory stages are eager local checkpoints and record no metrics rows
     assert out["metrics"].metrics == []
 
@@ -47,10 +80,11 @@ def test_run_pipeline_release_frees_all_caches(spark, corpus_parquet):
     after = _cached_rdd_ids(spark)
     leaked = [i for i, is_lc in after.items() if i not in before and not is_lc]
     assert leaked == [], f"non-localCheckpoint caches leaked after release(): {leaked}"
-    # This config takes the driver connected-components route and expands
-    # nothing, so every local checkpoint the run takes is a stage cut.
-    # (Checkpoints taken inside an operator — the distributed CC loop, the
-    # expansion BFS — stay pinned after release() until GC.)
+    # Both configs take the driver connected-components route, and
+    # expansion at depth 1 runs no BFS round, so every local checkpoint the
+    # run takes is a stage cut. (Checkpoints taken inside an operator — the
+    # distributed CC loop, the expansion BFS past depth 1 — stay pinned
+    # after release() until GC.)
     survivors = [i for i in after if i not in before]
     assert survivors == [], f"stage checkpoints on this config survived release(): {survivors}"
 
@@ -58,7 +92,6 @@ def test_run_pipeline_release_frees_all_caches(spark, corpus_parquet):
 def test_probe_release_frees_verify_cache(spark, corpus_parquet):
     import tempfile
 
-    from sparkclone.config import benchmark_config
     from sparkclone.incremental import incremental_scan_probe
     from sparkclone.pipeline import load_corpus, run_pipeline
 
