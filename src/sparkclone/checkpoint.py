@@ -146,20 +146,18 @@ class CheckpointManager:
     trade: a local checkpoint is not recomputed when an executor is lost,
     so a run that must survive executor loss passes a checkpoint root.
 
-    ``release()`` frees everything the run holds, stage checkpoints
-    included; the returned frames must not be read after it (a read then
-    fails with ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``)."""
+    The stage cut is the only cache: no operator persists a frame of its
+    own. A frame read twice inside one cut relies on AQE's exchange reuse,
+    and a frame read by two cuts is recomputed from the earlier cut.
+    ``release()`` frees the cuts; the returned frames must not be read
+    after it (a read then fails with
+    ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``)."""
 
     spark: SparkSession
     config_hash: str
     root: str | None = None
     metrics: list[StageMetrics] = field(default_factory=list)
-    # DataFrames persisted during the run by operators (e.g. the LSH
-    # routed band rows), and the in-memory stage checkpoints (cuts).
-    # ``release()`` frees both once the caller is done with the outputs —
-    # without it, a long-lived session running many pipelines accumulates
-    # dead blocks in storage memory.
-    aux: list[DataFrame] = field(default_factory=list)
+    # the in-memory stage checkpoints, freed by ``release()``
     cuts: list[DataFrame] = field(default_factory=list, init=False)
 
     def _stage_dir(self, stage: str) -> str | None:
@@ -236,7 +234,7 @@ class CheckpointManager:
                 )
                 return df
         if d is None:
-            # in-memory run: not persist(), which keeps the upstream plan
+            # in-memory run: not a lazy cache, which keeps the upstream plan
             # and so makes the driver re-analyze and re-plan the whole
             # cascade for every later action; the checkpoint is a scan leaf
             df = compute().localCheckpoint(eager=True)
@@ -268,30 +266,25 @@ class CheckpointManager:
         return out
 
     def release(self) -> None:
-        """Free every block the run holds: operator aux persists and the
-        in-memory stage checkpoints — a pipeline run's stages, or every cut
-        of an incremental probe, which takes its cuts through this manager
-        too. Call only once the outputs have been consumed: every frame the
-        run returned reads a stage checkpoint, so a read after this fails
-        with ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND`` instead of recomputing.
+        """Free the in-memory stage checkpoints — a pipeline run's stages,
+        or every cut of an incremental probe, which takes its cuts through
+        this manager too. The stage cut is the only cache, so this frees
+        every block the run's operators hold. Call only once the outputs
+        have been consumed: every frame the run returned reads a stage
+        checkpoint, so a read after this fails with
+        ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND`` instead of recomputing.
         Parquet stages are not touched, and neither are the local
         checkpoints that only two operators take inside a stage: the
         distributed connected-components loop and the expansion BFS past
         depth 1. Once the stage is cut they are unreachable, and their
         blocks stay pinned until Spark's context cleaner drops them after
         a driver GC."""
-        for df in self.aux:
-            try:
-                df.unpersist()
-            except Exception:  # noqa: BLE001 — session already stopped
-                pass
         for df in self.cuts:
             try:
                 # the checkpoint RDD behind the frame's LogicalRDD leaf
                 df._jdf.queryExecution().analyzed().rdd().unpersist(True)  # noqa: SLF001
             except Exception:  # noqa: BLE001 — session already stopped
                 pass
-        self.aux.clear()
         self.cuts.clear()
 
     def write_metrics_table(self) -> None:

@@ -67,7 +67,6 @@ def connected_components(
         .where(F.col("a") != F.col("b"))
         .select(F.xxhash64("a").alias("u"), F.xxhash64("b").alias("v"))
         .dropDuplicates()
-        .persist()
     )
     nodes = (
         edges.select(F.col(src).alias("unit_id"))
@@ -78,7 +77,6 @@ def connected_components(
     # symmetric edge list (u -> v both directions)
     sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v"))).dropDuplicates()
     sym = sym.localCheckpoint(eager=True)
-    e.unpersist()  # sym's eager localCheckpoint cut the lineage to e
 
     labels = nodes.select("node", F.col("node").alias("label")).localCheckpoint(eager=True)
     for _ in range(cfg.max_iterations):

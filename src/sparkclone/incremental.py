@@ -152,10 +152,14 @@ def load_probe_stages(
     MEMORY_AND_DISK): unlike a plain parquet stage — where each consumer
     re-scan is cheap columnar I/O — re-executing the chain's anti-join +
     union plan per consumer multiplies the resolution cost by the
-    probe's fan-out (measured 3x on the hop-2 bench). The first action
-    materializes the resolved state once. The caller owns that cache: a
-    probe over these frames does not free it, so ``unpersist()`` them once
-    the probe's outputs are consumed."""
+    probe's fan-out. Measured on perfbench ``diff_chain`` (4 cores, single
+    runs): without this persist the probe's ``signatures`` and
+    ``affected_snippets`` cuts took 0.56 s and 0.63 s at hop 5, against
+    0.16 s and 0.25 s with it, and ``op_s`` over hops 2–5 rose from
+    10.3–12.4 s to 11.6–13.9 s. The first action materializes the resolved
+    state once. The caller owns that cache: a probe over these frames does
+    not free it, so ``unpersist()`` them once the probe's outputs are
+    consumed."""
     out: dict = {}
     for stage in stages:
         chain = _probe_stage_chain(spark, key_dir, stage)
@@ -327,9 +331,9 @@ def incremental_scan_probe(
     To change how a merged stage is built, change its delta.
 
     Every stage is an eager local checkpoint, as in an in-memory
-    :func:`~sparkclone.pipeline.run_pipeline`. ``release`` frees them all,
-    with the operators' persists; read no returned frame after it (a read
-    then fails with ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``).
+    :func:`~sparkclone.pipeline.run_pipeline`, and the only cache the
+    probe holds. ``release`` frees them all; read no returned frame after
+    it (a read then fails with ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``).
     """
     from sparkclone.config import PipelineConfig
     from sparkclone.extract import extract_snippets
@@ -384,12 +388,12 @@ def incremental_scan_probe(
 
     # Every stage boundary is a lineage cut taken on run_pipeline's stage
     # policy: an eager local checkpoint through ``ck``, which records it
-    # and frees it (with the operators' persists) in the returned
-    # ``release``. The probe dataflow is a DAG — signatures feeds four
-    # consumers, affected three — and an uncut logical plan re-embeds the
-    # whole upstream tree per branch until Catalyst spends minutes
-    # optimizing a ~MB plan (measured: 105 s to verify 3 rows). Cutting
-    # keeps planning O(stages), and every cut is computed exactly once.
+    # and frees it in the returned ``release``. The probe dataflow is a DAG
+    # — signatures feeds four consumers, affected three — and an uncut
+    # logical plan re-embeds the whole upstream tree per branch until
+    # Catalyst spends minutes optimizing a ~MB plan (measured: 105 s to
+    # verify 3 rows). Cutting keeps planning O(stages), and every cut is
+    # computed exactly once.
     ck = CheckpointManager(spark, cfg.config_hash())
 
     def cut(stage: str, df: DataFrame) -> DataFrame:
@@ -624,7 +628,7 @@ def incremental_scan_probe(
         ),
     )
     # the star edges stay lazy over the cut: the findings cut reads them once
-    reps_sub, star_edges = collapse_exact(aff_snips, aux_registry=ck.aux)
+    reps_sub, star_edges = collapse_exact(aff_snips)
     reps_sub = cut("reps", reps_sub)
 
     # per-snippet signature cache for the affected reps (content-addressed
@@ -663,11 +667,10 @@ def incremental_scan_probe(
     ).select(F.col("snippet_id").alias("id"))
     pairs = cut(
         "candidate_pairs",
-        probe_candidate_pairs(bt_all, changed_rep_ids, cfg.lsh, aux_registry=ck.aux),
+        probe_candidate_pairs(bt_all, changed_rep_ids, cfg.lsh),
     )
     verified = cut("verified", with_lcs_evidence(
-        verify_candidates(pairs, signatures, cfg), cfg, all_snips,
-        aux_registry=ck.aux,
+        verify_candidates(pairs, signatures, cfg), cfg, all_snips
     ).select(*_EDGE_COLS))
 
     # star edges are already diff-proportional (collapse ran over the

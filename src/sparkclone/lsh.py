@@ -141,7 +141,6 @@ def probe_candidate_pairs(
     bt_all: DataFrame,
     probe_ids: DataFrame,
     cfg: LshConfig,
-    aux_registry: list | None = None,
 ) -> DataFrame:
     """Asymmetric pair generation for incremental scans: only the
     CHANGED side's buckets participate, so no full-corpus shuffle exists
@@ -168,16 +167,9 @@ def probe_candidate_pairs(
         "left_semi",
     )
     probe_buckets = probe_bands.select("band_id", "band_hash").dropDuplicates()
-    # cand_rows is consumed three times (bucket-size count, the probe
-    # side's semi-join, and the full right side of the pair join) and each
-    # consumer would otherwise re-run the band explode + broadcast bucket
-    # filter over the whole corpus' band table; persist the filtered frame
-    # once — it is probe-proportional (candidate-bucket members only).
     cand_rows = bt_all.join(
         F.broadcast(probe_buckets), ["band_id", "band_hash"], "left_semi"
-    ).persist()
-    if aux_registry is not None:
-        aux_registry.append(cand_rows)
+    )
     cap = cfg.max_bucket_size if cfg.max_bucket_size > 0 else (1 << 62)
     sizes = (
         cand_rows.groupBy("band_id", "band_hash")
@@ -212,9 +204,8 @@ def candidate_pairs(
     so a caller can see how many members the size cap dropped. It is a
     lazy frame: the bucket sizes are counted again only if it is read.
 
-    ``aux_registry``: persisted helper frames are appended here so the
-    caller can unpersist them once the pairs are materialized
-    (run_pipeline wires CheckpointManager.aux; see its release()).
+    ``aux_registry`` receives nothing; it stays for callers that still
+    pass it (``perfbench/ops.py``).
     """
     bt = band_table(sigs)
     sizes = (
@@ -223,15 +214,7 @@ def candidate_pairs(
         .where(F.col("bsize") >= 2)
     )
     cap = cfg.max_bucket_size if cfg.max_bucket_size > 0 else (1 << 62)
-    # routed is persisted: the pair generation reads it FOUR times (both
-    # sides of the plain self-join + both sides of the salted join), and
-    # without the cache each branch re-ran the band explode AND the
-    # bucket-size join (measured: candidate_pairs stage 19.4 s at sf0.1,
-    # the explode+join recompute being most of it). The cached frame is
-    # slim — (id, unit_key, spans, band key, bsize), no arrays/text.
-    routed = bt.join(sizes, ["band_id", "band_hash"]).persist()  # drops singleton buckets
-    if aux_registry is not None:
-        aux_registry.append(routed)
+    routed = bt.join(sizes, ["band_id", "band_hash"])  # drops singleton buckets
     small = routed.where(F.col("bsize") <= _SALT_THRESHOLD).drop("bsize")
     big = routed.where((F.col("bsize") > _SALT_THRESHOLD) & (F.col("bsize") <= cap)).drop("bsize")
 

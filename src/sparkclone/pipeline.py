@@ -95,6 +95,9 @@ def collapse_exact(
       (identical token sets give identical SimHash by construction);
       lcs_chars is text length when the raw texts are also identical,
       null otherwise (char-level LCS undefined without the texts).
+
+    ``aux_registry`` receives nothing; it stays for callers that still
+    pass it (``perfbench/ops.py``).
     """
     # Rep assignment via one slim aggregation + slim join-back instead of
     # a window (guide §2.3 "shuffle fewer bytes" / §2.4 "remove shuffles
@@ -115,7 +118,6 @@ def collapse_exact(
     #     wide exchange at all); at corpus scale it degrades to ONE wide
     #     exchange — never worse than the previous single wide join, and
     #     the wide rows move zero times in the common case.
-    # rep_map is persisted: reps' id set and star_edges both consume it.
     side_cols = [
         "unit_id", "path", "unit_start", "unit_end", "kind",
         "start_line", "end_line",
@@ -132,9 +134,7 @@ def collapse_exact(
     )
     rep_map = slim.groupBy("tokenset_hash").agg(
         F.min_by(rep_struct, F.col("snippet_id")).alias("__rep")
-    ).persist()
-    if aux_registry is not None:
-        aux_registry.append(rep_map)
+    )
     # snippet_id is content-addressed and globally unique (sha256 over
     # path/span/code recipes), so the semi-join keeps exactly the rows
     # picked as group minima. Column order restored explicitly: the
@@ -307,7 +307,7 @@ def run_pipeline(
         return tok if reuse is None else reuse.unionByName(tok)
 
     snippets = ck.load_or_compute("snippets", _snippets)
-    reps, star_edges = collapse_exact(snippets, aux_registry=ck.aux)
+    reps, star_edges = collapse_exact(snippets)
 
     # signatures drop the normalized text: every downstream consumer
     # (band table, verification sides) works on hashes/metadata, and the
@@ -350,12 +350,12 @@ def run_pipeline(
 
     # the pairs are a stage; the routing counts are not: bucket_stats stays
     # lazy over the signatures stage and runs only when a caller reads it
-    lazy_pairs, bucket_stats = candidate_pairs(signatures, cfg.lsh, aux_registry=ck.aux)
+    lazy_pairs, bucket_stats = candidate_pairs(signatures, cfg.lsh)
     pairs = ck.load_or_compute("candidate_pairs", lambda: lazy_pairs)
 
     def _verified() -> DataFrame:
         v = verify_candidates(pairs, signatures, cfg)
-        v = with_lcs_evidence(v, cfg, snippets, aux_registry=ck.aux)
+        v = with_lcs_evidence(v, cfg, snippets)
         return v.select(*_EDGE_COLS)
 
     verified = ck.load_or_compute("verified", _verified)

@@ -106,8 +106,9 @@ def dedupe_span_pairs(edges: DataFrame) -> DataFrame:
     form (map-side partial agg, no sort): runtime was fine, but
     optimizing the resulting plan — GetStructField fan-out over a
     min_by struct whose fields are the canonicalize CASE WHEN trees —
-    cost Catalyst a measured **33 s of driver time at persist()** vs
-    1.8 s for this window form (fresh-session A/B, 400-repo corpus).
+    cost Catalyst a measured **33 s of driver time to materialize the
+    frame** vs 1.8 s for this window form (fresh-session A/B, 400-repo
+    corpus).
     The window's exchange+sort on the span-pair key is a few hundred ms
     of executor time at bench scale and data-proportional beyond —
     planning cost dominates; do not re-attempt without re-measuring the

@@ -238,10 +238,10 @@ def srp_topk(
     in at least one of ``n_tables`` independent hash tables (collision
     prob per plane = 1 - theta/pi; multiple tables trade candidate volume
     for recall exactly like LSH band count), then exact cosine + window
-    rank within candidates. The cross join is replaced by bucket
-    equi-joins — the 100 TB-viable plan.
+    rank within candidates. The cross join is replaced by pairs emitted
+    within each bucket — the 100 TB-viable plan.
 
-    Shuffle discipline: the bucket self-join and the dedupe of pairs seen
+    Shuffle discipline: the bucket grouping and the dedupe of pairs seen
     in multiple tables carry ONLY (table, bucket, id) / (query_id,
     neighbor_id) — never the vectors. A pair colliding in up to n_tables
     tables would otherwise drag 2*dim floats through the widest shuffle
@@ -270,23 +270,22 @@ def srp_topk(
     # computes every table's bucket in a single matrix multiply (plan stays
     # O(1) in n_planes*dim — see _srp_buckets_udf), then posexplode
     # qualifies the bucket key with the table index so tables don't
-    # cross-match
-    # persist: the bucket table feeds BOTH sides of the candidate
-    # self-join, and without the cache each side re-runs the scan + the
-    # bucketing UDF over every vector (the before-plan showed two
-    # ArrowEvalPython nodes for one logical bucketing pass — the §4.4
-    # duplicate-evaluation shape, here caused by self-join fan-out).
-    # The frame is slim — (id, table, bucket) int64s, ~24 B/row/table.
-    tb = base.select(
-        "id",
-        F.posexplode(_srp_buckets_udf(planes)(F.col("v"))).alias("table", "bucket"),
-    ).persist()
-    left = tb.select("table", "bucket", F.col("id").alias("query_id"))
-    right = tb.select("table", "bucket", F.col("id").alias("neighbor_id"))
+    # cross-match. Candidates are emitted per bucket (collect its ids,
+    # explode them twice) rather than by self-joining the bucket rows:
+    # the bucketing UDF runs once per vector with no cached table to free,
+    # where a self-join evaluates it once per side.
+    members = (
+        base.select(
+            "id",
+            F.posexplode(_srp_buckets_udf(planes)(F.col("v"))).alias("table", "bucket"),
+        )
+        .groupBy("table", "bucket")
+        .agg(F.collect_list("id").alias("__ids"))
+    )
     cand = (
-        left.join(right, ["table", "bucket"])
+        members.select(F.explode("__ids").alias("query_id"), "__ids")
+        .select("query_id", F.explode("__ids").alias("neighbor_id"))
         .where(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id")
         .dropDuplicates()
     )
     # scoring: norms are a PER-ID quantity — compute them on the slim

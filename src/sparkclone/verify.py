@@ -254,6 +254,9 @@ def with_lcs_evidence(
     ``snippets`` supplies ``(snippet_id, norm_text)``; the texts are joined
     in ONLY for the SimHash-gated subset, so the wide text shuffle scales
     with the number of near-verbatim pairs, not all verified pairs.
+
+    ``aux_registry`` receives nothing; it stays for callers that still
+    pass it (``perfbench/ops.py``).
     """
     near = F.col("hamming") <= F.lit(cfg.signature.simhash_near_radius)
     if not cfg.lcs_evidence:
@@ -267,13 +270,7 @@ def with_lcs_evidence(
     # a renamed/structural near-dup where a char-level LCS is meaningless.
     # coalesce makes the split exhaustive: a NULL hamming (edges produced
     # without simhash) routes to `rest` with lcs_chars NULL instead of
-    # silently vanishing from both branches. persist() materializes the
-    # verification lineage once instead of once per branch of the union;
-    # the caller unpersists via aux_registry once the output is
-    # materialized (CheckpointManager.release()).
-    verified = verified.persist()
-    if aux_registry is not None:
-        aux_registry.append(verified)
+    # silently vanishing from both branches.
     gate = F.coalesce(
         F.col("hamming") <= F.lit(2 * cfg.signature.simhash_near_radius), F.lit(False)
     )

@@ -2,13 +2,14 @@
 session once its outputs are consumed and release() is called (round-2
 verdict "What's wrong" #4).
 
-An in-memory run's release() frees its stage checkpoints too, and so does
-an incremental probe's; on a config whose operators take no local
-checkpoints of their own (expansion at depth 1 takes none), nothing the
-run created survives it. Elsewhere localCheckpoint()ed frames are
-exempt by design — their cached blocks ARE the truncated lineage of
-frames the caller may still hold — so those assertions distinguish them
-via RDD.isLocallyCheckpointed().
+The stage cut is the only cache: while a run or a probe is alive, every
+RDD it persisted is a stage checkpoint. An in-memory run's release()
+frees them, and so does an incremental probe's; on a config whose
+operators take no local checkpoints of their own (expansion at depth 1
+takes none), nothing the run created survives it. Elsewhere
+localCheckpoint()ed frames are exempt by design — their cached blocks ARE
+the truncated lineage of frames the caller may still hold — so those
+assertions distinguish them via RDD.isLocallyCheckpointed().
 """
 
 from __future__ import annotations
@@ -71,7 +72,7 @@ def test_run_pipeline_release_frees_all_caches(spark, corpus_parquet, cfg):
 
     during = _cached_rdd_ids(spark)
     new_plain = [i for i, is_lc in during.items() if i not in before and not is_lc]
-    assert new_plain, "expected the run's operator aux persists to be cached while alive"
+    assert new_plain == [], f"the run persisted frames besides its stage cuts: {new_plain}"
 
     new_lc = [i for i, is_lc in during.items() if i not in before and is_lc]
     assert new_lc, "expected the in-memory stages to be local checkpoints"
@@ -105,6 +106,9 @@ def test_probe_release_frees_verify_cache(spark, corpus_parquet):
         spark, corpus, base["snippets"], base["signatures"], old, benchmark_config()
     )
     probe["diff_findings"].count()
+    during = _cached_rdd_ids(spark)
+    new_plain = [i for i, is_lc in during.items() if i not in before and not is_lc]
+    assert new_plain == [], f"the probe persisted frames besides its cuts: {new_plain}"
     probe["release"]()
     base["metrics"].release()
     after = _cached_rdd_ids(spark)
